@@ -15,8 +15,10 @@ Reference parity:
 from __future__ import annotations
 
 import json
+from collections import namedtuple
 from collections.abc import Iterator
 from dataclasses import dataclass, field
+from functools import lru_cache
 
 import pandas as pd
 
@@ -37,7 +39,21 @@ def iter_sorted(pdfs: Iterator[pd.DataFrame], seq_col: str = "seq"):
     frames = [pdf for pdf in pdfs if len(pdf)]
     if not frames:
         return iter(())
-    return pd.concat(frames).sort_values(seq_col).itertuples(index=False)
+    # Called once per key per micro-batch, and most keys arrive as one
+    # chunk of a row or two: skip the concat copy and the no-op sort,
+    # and build rows from a cached namedtuple type (itertuples defines
+    # a new class on every call, ~0.2 ms of a keyed stream's per-key cost).
+    pdf = frames[0] if len(frames) == 1 else pd.concat(frames)
+    if len(pdf) > 1:
+        pdf = pdf.sort_values(seq_col)
+    cols = tuple(pdf.columns)
+    return map(_row_type(cols)._make, zip(*(pdf[c].tolist() for c in cols)))
+
+
+@lru_cache(maxsize=None)
+def _row_type(cols: tuple[str, ...]):
+    """The row type `DataFrame.itertuples(index=False)` would build."""
+    return namedtuple("Pandas", cols, rename=True)
 
 # ---------------------------------------------------------------------------
 # ST1 — fraud detector (`FraudDetectorExample.java:71-121`)

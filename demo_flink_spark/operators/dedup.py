@@ -443,6 +443,9 @@ def minhash_signatures(
 
     from demo_flink_spark.operators.fasthash import md5_u64_batch
 
+    if bands is not None and (bands <= 0 or n_hashes % bands):
+        # a remainder would silently leave signature rows out of every band
+        raise ValueError(f"bands={bands} must divide n_hashes={n_hashes}")
     sh = shingles_df if shingles_df is not None else shingles(docs, text_col, n)
     p = np.uint64(MINHASH_P)
     a_list, b_list = minhash_params(n_hashes)

@@ -74,10 +74,6 @@ _G = (
 _INIT = (0x67452301, 0xEFCDAB89, 0x98BADCFE, 0x10325476)
 
 
-def _rotl(x: np.ndarray, s: int) -> np.ndarray:
-    return (x << _U32(s)) | (x >> _U32(32 - s))
-
-
 def _md5_rounds(blocks_u32: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Run MD5 over a (N, n_blocks*16) uint32 word array (one padded
     message per row, all rows the same block count). Returns the final

@@ -85,7 +85,8 @@ def widen_if_narrow(df: DataFrame, target: int | None = None) -> DataFrame:
     """
     t = target or df.sparkSession.sparkContext.defaultParallelism
     # physical partition count of the frame as planned (for a scan:
-    # the file-split count); computing it is a plan walk, no job
+    # the file-split count). Not free: getNumPartitions() builds the
+    # physical plan and a Python RDD over it, though it runs no job
     if df.rdd.getNumPartitions() < t:
         return df.repartition(t)
     return df

@@ -9,9 +9,19 @@ harness:
   somewhere; AQE re-plans from real shuffle statistics.
 - **Arrow on** for every Python boundary (pandas UDFs, toPandas,
   applyInPandas) — batch transfer, not per-row pickling.
-- **Shuffle partitions** default to a small number locally (tests run
-  on local[*] with tiny data); on a real cluster this is overridden to
-  ~2-3× total cores. AQE coalesces downward so erring high is safe.
+- **Shuffle partitions** default to the core count `local[...]` runs
+  on: `SPARK_GRAFT_CPUS` when set, else the CPUs this process may use
+  (`nproc`). `SPARK_GRAFT_SHUFFLE_PARTITIONS` or the `shuffle_partitions`
+  argument overrides it; on a real cluster pass ~2-3x total executor
+  cores. Batch work barely notices, since AQE coalesces the excess (a
+  `sql_dedup` pass runs 117 tasks at 32 and at 4 partitions). Streaming
+  state does notice: each stateful operator opens, updates and commits
+  one state store per partition per micro-batch, and a fixed 32 on a
+  4-core host made the keyed-state CDC stream's batches ~4-5x slower
+  (SCALING.md).
+- **RocksDB state with changelog checkpointing**: a micro-batch commit
+  writes the batch's changelog instead of a full snapshot, which roughly
+  halved the CDC stream's commit time (SCALING.md).
 """
 
 from __future__ import annotations
@@ -20,10 +30,14 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Tuned for the local harness (local[32], 128 GiB). On a 1000-executor
-# cluster, pass shuffle_partitions≈2-3× total executor cores instead;
-# AQE's coalescePartitions trims the excess at runtime.
-_DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+
+def _host_cores() -> int:
+    """CPUs this process may run on: `nproc`, and the count the JVM's
+    `local[*]` resolves to unless a cgroup CPU quota lowers the JVM's
+    view (then the default errs high, which AQE coalesces away)."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
 
 
 def get_spark(
@@ -33,8 +47,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    Safe to call repeatedly — Spark returns the existing session; conf
-    set here only applies on first creation.
+    Safe to call repeatedly — Spark returns the existing session and
+    re-applies the runtime SQL conf set here to it; static conf (master,
+    driver memory) only applies on first creation.
     """
     # Python workers (pandas UDFs, transformWithStateInPandas drivers)
     # are separate processes that must import this package. Locally
@@ -49,6 +64,11 @@ def get_spark(
         )
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    partitions = int(
+        shuffle_partitions
+        or os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+        or (cpus if cpus.isdigit() else _host_cores())
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -57,10 +77,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # --- shuffle sizing ---
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or _DEFAULT_SHUFFLE_PARTITIONS),
-        )
+        .config("spark.sql.shuffle.partitions", str(partitions))
         # --- Arrow across every JVM<->Python hop ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
@@ -95,6 +112,10 @@ def get_spark(
         .config(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        )
+        .config(
+            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+            "true",
         )
         .config("spark.ui.enabled", "false")
         # Sized to the stated harness container (local[32], 128 GiB):

@@ -144,9 +144,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     with _HANDLES_LOCK:
-        if len(per_session) >= _MAX_HANDLES:
-            per_session.pop(next(iter(per_session)))
-        per_session[key] = df
+        # Re-fetch the live dict: a clear_table_handles() during the read
+        # above replaced it, and this handle may hold the pre-clear file
+        # listing, so it is returned uncached instead of entering the
+        # fresh cache (clear fences in-flight loads).
+        if _HANDLES.setdefault(spark, {}) is per_session:
+            if len(per_session) >= _MAX_HANDLES:
+                per_session.pop(next(iter(per_session)))
+            per_session[key] = df
     return df
 
 

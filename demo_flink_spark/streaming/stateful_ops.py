@@ -149,9 +149,12 @@ def _cdc_detector(key, pdfs, state) -> Iterator[pd.DataFrame]:
             out.append((str(key[0]), int(row.seq), fname, action, old_v, new_v))
     if prev is not None:
         state.update((prev,))
-    yield pd.DataFrame(
-        out, columns=["key", "seq", "field", "action", "old_value", "new_value"]
-    )
+    # a key whose records only seed its state or repeat it emits no
+    # diff; the runner drops empty frames, so do not build one
+    if out:
+        yield pd.DataFrame(
+            out, columns=["key", "seq", "field", "action", "old_value", "new_value"]
+        )
 
 
 CDC_DETECTOR = StatefulOp(

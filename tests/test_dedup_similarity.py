@@ -373,6 +373,15 @@ def test_binary_quantize_rejects_non_multiple_of_32(spark):
         sim.binary_quantize_words(df, "embedding", "vec_id", dim=48)
 
 
+def test_minhash_signatures_rejects_bands_not_dividing_hashes(spark):
+    """64 hashes cannot split into 12 equal bands; the band fold would
+    silently leave the last 4 signature rows out of every band."""
+    import pytest
+
+    with pytest.raises(ValueError, match="must divide"):
+        dd.minhash_signatures(_docs_df(spark), n_hashes=64, bands=12)
+
+
 def test_label_centroid_cosine_matches_numpy(spark):
     """Centroid cosine must equal numpy over the SAME micros-rounded
     integers; two labels whose members share a direction hit cos=1."""

@@ -28,6 +28,7 @@ def _collect_pagerank(spark, parts):
         + [(f"n{(i * 7 + 3) % 40}", f"n{i}") for i in range(120)],
         "src string, dst string",
     )
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     try:
         return sorted(
@@ -35,7 +36,7 @@ def _collect_pagerank(spark, parts):
             for r in pagerank(edges, n_iter=9, checkpoint_every=3).collect()
         )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _collect_cc_star(spark, parts):
@@ -48,6 +49,7 @@ def _collect_cc_star(spark, parts):
         + [(200, 201)]
     )
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     try:
         return sorted(
@@ -55,7 +57,7 @@ def _collect_cc_star(spark, parts):
             for r in connected_components_star(df).collect()
         )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def test_pagerank_stable_across_shuffle_partitions(spark):

@@ -193,3 +193,31 @@ def test_binary_files_source(spark):
         for name, content in payloads.items():
             assert bytes(rows[name].content) == content
             assert rows[name].length == len(content)
+
+
+def test_clear_table_handles_fences_in_flight_load():
+    """A clear_table_handles() that lands while a load is reading must
+    keep that load's handle (which may hold the pre-clear listing) out
+    of the cache; the next load reads afresh."""
+    from demo_flink_spark.sources import tables
+
+    class _Reader:
+        def __init__(self):
+            self.reads = 0
+
+        def parquet(self, path):
+            self.reads += 1
+            if self.reads == 1:
+                tables.clear_table_handles()
+            return (path, self.reads)
+
+    class _Session:
+        _dfs_session_ready = True  # skip ensure_session's Spark setup
+
+        def __init__(self):
+            self.read = _Reader()
+
+    s = _Session()
+    first = tables.load_table(s, "/sf", "orders")
+    assert tables.load_table(s, "/sf", "orders") != first
+    assert tables.load_table(s, "/sf", "orders") == ("/sf/orders.parquet", 2)
