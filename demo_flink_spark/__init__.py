@@ -5,7 +5,7 @@ capabilities of the reference stream-processing demo collection
 (`heyyy-ankit/demo-flink`), built Spark-first:
 
 - batch + streaming DataFrames (Catalyst-optimized, whole-stage codegen)
-- keyed stateful operators via ``transformWithStateInPandas``
+- keyed stateful operators via ``applyInPandasWithState``
 - event-time windows + watermarks via Structured Streaming
 - LLM-data-pipeline extensions (dedup, similarity, text analysis,
   multimodal column plumbing) designed for 100 TB scale.

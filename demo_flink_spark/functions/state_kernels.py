@@ -1,9 +1,9 @@
-"""Pure-Python state kernels shared by the streaming StatefulProcessors
+"""Pure-Python state kernels shared by the streaming stateful operators
 and their batch twins.
 
 The reference implements each stateful rule once inside a Flink
 Rich*Function; we do the same — one kernel function per rule — and
-call it from BOTH execution paths (transformWithStateInPandas for
+call it from BOTH execution paths (applyInPandasWithState for
 streams, applyInPandas for batch), so golden tests pin a single
 implementation.
 
@@ -30,7 +30,7 @@ def iter_sorted(pdfs: Iterator[pd.DataFrame], seq_col: str = "seq"):
     (`FraudDetectorExample.java:44`); we sort on the explicit seq
     column instead, which stays deterministic under any partitioning.
 
-    Shared by BOTH state APIs. Concatenating before sorting matters:
+    Shared by every keyed operator. Concatenating before sorting matters:
     one key's rows in a micro-batch can span multiple Arrow chunks
     (spark.sql.execution.arrow.maxRecordsPerBatch), and sorting each
     chunk independently would step the kernel in nondeterministic
@@ -177,7 +177,7 @@ def cdc_step(
     prev_raw: str | None, raw: str
 ) -> tuple[str | None, list[tuple[str, str, str | None, str | None]]]:
     """One CDC step over raw-string state (the durable-state form used
-    by the streaming processor, whose ValueState holds the raw JSON).
+    by the streaming operator, whose state holds the raw JSON).
     Returns (new_state_raw, diffs). See `cdc_step_parsed`.
     """
     prev = (prev_raw, json.loads(prev_raw)) if prev_raw is not None else None

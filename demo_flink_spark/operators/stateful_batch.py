@@ -1,13 +1,13 @@
 """Batch twins of the keyed stateful operators (SURVEY §2.6).
 
-Each streaming StatefulProcessor has a batch equivalent here. Where the
-semantics are pure window algebra (running counter, history, trailing
-count, lag-diff) the twin is built-in window functions — fully
-Catalyst-planned, oracle-checkable, and the shape you'd actually run
-over 100 TB of *stored* history. Where the rule is inherently
-sequential (alert throttling, no-change state freeze) the twin is
-`applyInPandas` per key, stepping the SAME kernel functions the
-streaming processors use.
+Each streaming stateful operator (`streaming.stateful_ops`) has a
+batch equivalent here. Where the semantics are pure window algebra
+(running counter, history, trailing count, lag-diff) the twin is
+built-in window functions — fully Catalyst-planned, oracle-checkable,
+and the shape you'd actually run over 100 TB of *stored* history.
+Where the rule is inherently sequential (alert throttling, no-change
+state freeze) the twin is `applyInPandas` per key, stepping the SAME
+kernel functions the streaming operators use.
 """
 
 from __future__ import annotations
@@ -178,7 +178,7 @@ def cdc_diff_batch(df: DataFrame, key_col: str, seq_col: str, json_col: str) -> 
     no-change record (`TradeChangeDetectionJob.java:109-111`), so the
     comparison baseline is "last record that produced a diff", which
     lag() can't express. The replay steps the same kernel the
-    streaming processor uses, as a sort-merge `mapInPandas` pass
+    streaming operator uses, as a sort-merge `mapInPandas` pass
     (shuffle on key → sort within partitions → one streaming generator
     per partition, state reset on key change) — flat memory on hot
     keys and no per-group pandas round-trip; see `fraud_alerts`.

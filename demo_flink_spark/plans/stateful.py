@@ -1,6 +1,6 @@
 """Declared queries: keyed stateful operators, batch twins (SURVEY §2.6).
 
-The streaming StatefulProcessors themselves are exercised by the
+The streaming stateful operators themselves are exercised by the
 golden fixture tests (tests/test_stateful.py, FIXTURES.md F3-F6) under
 real Structured Streaming; these declared queries are their batch
 twins over the `events` table — window-algebra forms with full DuckDB

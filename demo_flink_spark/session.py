@@ -51,7 +51,7 @@ def get_spark(
     re-applies the runtime SQL conf set here to it; static conf (master,
     driver memory) only applies on first creation.
     """
-    # Python workers (pandas UDFs, transformWithStateInPandas drivers)
+    # Python workers (pandas UDFs, applyInPandasWithState functions)
     # are separate processes that must import this package. Locally
     # that's PYTHONPATH; on a real cluster you'd ship a wheel via
     # --py-files / spark.submit.pyFiles instead. Must be set before the

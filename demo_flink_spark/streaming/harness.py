@@ -7,10 +7,8 @@ exact production code path — state store, Arrow transfer, micro-batch
 execution — rather than a pure-Python simulation. Multi-batch replay
 proves state survives micro-batch boundaries.
 
-API selection: prefers `transformWithStateInPandas` (Spark 4.1,
-Flink-parity ValueState/ListState handles) when its protobuf runtime
-dep is importable; otherwise falls back to `applyInPandasWithState`
-(no extra deps). Both run the same kernels and pass the same goldens.
+Every operator runs on `applyInPandasWithState`, the engine's one
+keyed-state API (see `streaming.stateful_ops`).
 """
 
 from __future__ import annotations
@@ -25,16 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupStateTimeout
 
 from demo_flink_spark.streaming.stateful_ops import StatefulOp
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas needs google.protobuf at runtime."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def run_stateful(
@@ -66,9 +54,7 @@ def run_stateful(
     fire (the Flink onTimer parity pattern of streaming/timers.py) —
     that is how a 100 TB pipeline bounds custom-op state, and
     tests/test_state_bounded.py measures the resulting plateau.
-    EventTimeTimeout requires the watermark; the
-    `transformWithStateInPandas` auto-upgrade stays on the NoTimeout
-    path (its timer wiring lands with the protobuf env gate).
+    EventTimeTimeout requires the watermark.
 
     `metrics_out`: a caller-supplied list extended with the per-batch
     state metrics (`state_receipt.batch_state_metrics`) before the
@@ -150,26 +136,13 @@ def _run_stateful_in(
         ts_col, delay = watermark
         stream = stream.withWatermark(ts_col, delay)
     grouped = stream.groupBy(*key_cols)
-    use_tws = (
-        tws_available()
-        and op.processor_factory is not None
-        and timeout_conf == GroupStateTimeout.NoTimeout
+    transformed = grouped.applyInPandasWithState(
+        op.fn,
+        outputStructType=op.output_schema,
+        stateStructType=op.state_schema,
+        outputMode="append",
+        timeoutConf=timeout_conf,
     )
-    if use_tws:
-        transformed = grouped.transformWithStateInPandas(
-            statefulProcessor=op.processor_factory(),
-            outputStructType=op.output_schema,
-            outputMode="Append",
-            timeMode="None",
-        )
-    else:
-        transformed = grouped.applyInPandasWithState(
-            op.fn,
-            outputStructType=op.output_schema,
-            stateStructType=op.state_schema,
-            outputMode="append",
-            timeoutConf=timeout_conf,
-        )
 
     name = f"stateful_{uuid.uuid4().hex[:8]}"
     ckpt = os.path.join(root, f"ckpt_{name}")

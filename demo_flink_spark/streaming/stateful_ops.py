@@ -1,25 +1,23 @@
 """Keyed stateful operators on the `applyInPandasWithState` API.
 
-Same four operators as `streaming.processors` (SURVEY §2.6 ST1-ST4),
-same shared kernels (`functions.state_kernels`), different state API:
-`applyInPandasWithState` carries ONE state tuple per key (vs the named
-ValueState/ListState handles of `transformWithStateInPandas`). The
+The four keyed ProcessFunction operators of SURVEY §2.6 (ST1-ST4), built
+on the shared kernels in `functions.state_kernels`.
+`applyInPandasWithState` carries ONE state tuple per key, so the
 reference's multiple state descriptors per operator collapse into one
 struct — e.g. the fraud detector's ListState+ValueState becomes
 `(recent_ts: array<long>, last_alert: long)`.
 
-Why both APIs exist here: `transformWithStateInPandas` (Spark ≥4.0) is
-the closer Flink-parity surface but its state client needs protobuf at
-runtime; `applyInPandasWithState` (Spark ≥3.4) has no extra deps. The
-harness picks whichever the environment supports — identical outputs,
-proven by the same golden tests.
+This is the engine's only keyed-state API. Spark's handle-based state
+API (named ValueState/ListState handles) is not used: its Python state
+client needs protobuf at runtime, so a twin on it would never run under
+the golden, recovery and benchmark checks that prove this path.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 from dataclasses import dataclass
-from typing import Any, Callable
+from typing import Callable
 
 import pandas as pd
 
@@ -29,27 +27,19 @@ from demo_flink_spark.functions.state_kernels import (
     fraud_step,
     iter_sorted,
 )
-from demo_flink_spark.streaming import processors as _tws
 
 
 @dataclass(frozen=True)
 class StatefulOp:
     """One keyed stateful operator, wired for applyInPandasWithState.
 
-    `fn(key, pdf_iter, state)` yields output pandas frames;
-    `processor_factory` (optional) builds the equivalent Spark-4.1
-    StatefulProcessor for environments with protobuf.
+    `fn(key, pdf_iter, state)` yields output pandas frames.
     """
 
     name: str
     fn: Callable[..., Iterator[pd.DataFrame]]
     output_schema: str
     state_schema: str
-    processor_factory: Callable[[], Any] | None = None
-
-
-# Deterministic in-batch ordering shared with streaming.processors.
-_iter_sorted = iter_sorted
 
 
 # --- ST4: running counter (`UserClickCounter.java:39-61`) -------------------
@@ -58,7 +48,7 @@ _iter_sorted = iter_sorted
 def _running_counter(key, pdfs, state) -> Iterator[pd.DataFrame]:
     n = state.get[0] if state.exists else 0
     out = []
-    for row in _iter_sorted(pdfs):
+    for row in iter_sorted(pdfs):
         n += 1
         out.append((key[0], int(row.seq), n))
     state.update((n,))
@@ -70,7 +60,6 @@ RUNNING_COUNTER = StatefulOp(
     fn=_running_counter,
     output_schema="user_id string, seq long, clicks long",
     state_schema="n long",
-    processor_factory=_tws.RunningCounter,
 )
 
 
@@ -80,7 +69,7 @@ RUNNING_COUNTER = StatefulOp(
 def _event_list(key, pdfs, state) -> Iterator[pd.DataFrame]:
     history = list(state.get[0]) if state.exists and state.get[0] is not None else []
     out = []
-    for row in _iter_sorted(pdfs):
+    for row in iter_sorted(pdfs):
         history.append(str(row.event))
         out.append((key[0], int(row.seq), ",".join(history)))
     state.update((history,))
@@ -92,7 +81,6 @@ EVENT_LIST = StatefulOp(
     fn=_event_list,
     output_schema="user_id string, seq long, history string",
     state_schema="events array<string>",
-    processor_factory=_tws.EventListAccumulator,
 )
 
 
@@ -109,7 +97,7 @@ def _fraud_detector(key, pdfs, state) -> Iterator[pd.DataFrame]:
     else:
         st = FraudState()
     out = []
-    for row in _iter_sorted(pdfs):
+    for row in iter_sorted(pdfs):
         count, fired = fraud_step(st, float(row.amount), int(row.ts_ms))
         if fired:
             out.append(
@@ -133,7 +121,6 @@ FRAUD_DETECTOR = StatefulOp(
     fn=_fraud_detector,
     output_schema="user_id string, seq long, ts_ms long, tracked int, alert string",
     state_schema="recent_ts array<long>, last_alert long",
-    processor_factory=_tws.FraudDetector,
 )
 
 
@@ -143,7 +130,7 @@ FRAUD_DETECTOR = StatefulOp(
 def _cdc_detector(key, pdfs, state) -> Iterator[pd.DataFrame]:
     prev = state.get[0] if state.exists else None
     out = []
-    for row in _iter_sorted(pdfs):
+    for row in iter_sorted(pdfs):
         prev, diffs = cdc_step(prev, str(row.value))
         for fname, action, old_v, new_v in diffs:
             out.append((str(key[0]), int(row.seq), fname, action, old_v, new_v))
@@ -165,5 +152,4 @@ CDC_DETECTOR = StatefulOp(
         "old_value string, new_value string"
     ),
     state_schema="raw string",
-    processor_factory=_tws.TradeChangeDetector,
 )

@@ -1,4 +1,4 @@
-"""Streaming window operators + watermarks (SURVEY §2.5 W1-W7).
+"""Streaming window operators + watermarks (SURVEY §2.5).
 
 The batch twins in `plans.windows` prove the grouping semantics against
 DuckDB; these wire the same `window()`/`session_window()` groupings
@@ -14,6 +14,8 @@ into Structured Streaming with watermarks. Semantics notes:
   tests/test_streaming.py::test_allowed_lateness_refire.
 - Records older than the watermark are silently dropped by the agg —
   the late-data side output (W5) is `streaming.late_data.LateRouter`.
+- The sliding window (W7) is covered by the batch query
+  `window_sliding_10m_5m` alone; it has no streaming operator here.
 """
 
 from __future__ import annotations
@@ -38,24 +40,6 @@ def windowed_count_stream(
     return (
         stream.withWatermark(ts_col, watermark_delay)
         .groupBy(F.window(F.col(ts_col), window_duration).alias("w"), F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), key_col, "cnt")
-    )
-
-
-def sliding_count_stream(
-    stream: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "word",
-    size: str = "10 seconds",
-    slide: str = "5 seconds",
-    watermark_delay: str = "10 seconds",
-) -> DataFrame:
-    """Sliding event-time window count (W7 — commented out in the
-    reference at `AdvancedWordCount.java:40`, realized here)."""
-    return (
-        stream.withWatermark(ts_col, watermark_delay)
-        .groupBy(F.window(F.col(ts_col), size, slide).alias("w"), F.col(key_col))
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.col("w.start").alias("window_start"), key_col, "cnt")
     )

@@ -22,7 +22,6 @@ batch. This file pins the exact relationship:
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 
 from pyspark.sql import functions as F
@@ -47,10 +46,10 @@ PER_RECORD_EMISSIONS = [
 ]
 
 
-def _stage_batches(spark, batch_of: list[int]) -> str:
+def _stage_batches(spark, tmp_path, batch_of: list[int]) -> str:
     """One parquet file per batch index, mtime-ordered so the
     FileStreamSource replays them in batch order."""
-    stage = tempfile.mkdtemp(prefix="per_record_src_")
+    stage = str(tmp_path / "src")
     rows = [(b, u) for b, (u,) in zip(batch_of, CLICKS)]
     df = spark.createDataFrame(rows, "b int, user_id string")
     base = time.time() - len(set(batch_of)) - 1
@@ -94,10 +93,10 @@ def _update_mode_emissions(spark, stage: str) -> list[list[tuple[str, int]]]:
     return emissions
 
 
-def test_coarse_batches_coalesce_intermediate_totals(spark):
+def test_coarse_batches_coalesce_intermediate_totals(spark, tmp_path):
     # 2 batches of 3 records: user1's intermediate total (1) never
     # appears — the same-batch coalescing Flink users must expect
-    stage = _stage_batches(spark, [0, 0, 0, 1, 1, 1])
+    stage = _stage_batches(spark, tmp_path, [0, 0, 0, 1, 1, 1])
     got = _update_mode_emissions(spark, stage)
     assert got == [
         [("user1", 2), ("user2", 1)],
@@ -107,10 +106,10 @@ def test_coarse_batches_coalesce_intermediate_totals(spark):
     assert sum(len(b) for b in got) == len(PER_RECORD_EMISSIONS) - 1
 
 
-def test_one_record_batches_reproduce_flink_sequence(spark):
+def test_one_record_batches_reproduce_flink_sequence(spark, tmp_path):
     # 6 batches of 1 record: update mode emits Flink's per-record
     # sequence exactly, in order
-    stage = _stage_batches(spark, list(range(len(CLICKS))))
+    stage = _stage_batches(spark, tmp_path, list(range(len(CLICKS))))
     got = _update_mode_emissions(spark, stage)
     assert [rows[0] for rows in got] == PER_RECORD_EMISSIONS
     assert all(len(rows) == 1 for rows in got)

@@ -8,7 +8,6 @@ collects through foreachBatch — one of the recovery-capable sinks."""
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 
 from pyspark.sql.streaming.state import GroupStateTimeout
@@ -39,9 +38,8 @@ def _start(spark, stage, schema, ckpt, sink_rows):
     )
 
 
-def test_state_survives_query_restart(spark):
-    stage = tempfile.mkdtemp(prefix="recov_src_")
-    ckpt = tempfile.mkdtemp(prefix="recov_ckpt_")
+def test_state_survives_query_restart(spark, tmp_path):
+    stage, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
     schema = "seq long, user_id string"
 
     batch0 = spark.createDataFrame([(1, "u1"), (2, "u1"), (3, "u2")], schema)
@@ -69,22 +67,20 @@ def test_state_survives_query_restart(spark):
     assert dict(rows2) == {4: 3, 5: 1}
 
 
-def test_budget_prefix_state_survives_query_restart(spark):
+def test_budget_prefix_state_survives_query_restart(spark, tmp_path):
     """The kept-prefix state (including the overflow cut) survives a
     full stop/restart: batch 2 after recovery must evict against the
     state batch 1 built, and a post-cut arrival must stay dropped —
     the cut is the part of state a naive reimplementation would lose.
     """
     import hashlib
-    import tempfile
     import uuid
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from demo_flink_spark.streaming.budget_stream import token_budget_op
 
-    stage = tempfile.mkdtemp(prefix="recov_bgt_src_")
-    ckpt = tempfile.mkdtemp(prefix="recov_bgt_ckpt_")
+    stage, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
     schema = "doc_id long, grp string, text string"
     op = token_budget_op({"g": 6})
 

@@ -216,6 +216,7 @@ def test_run_stateful_no_leak_on_error(spark):
     import tempfile
 
     import pytest as _pytest
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from demo_flink_spark.streaming.harness import run_stateful
     from demo_flink_spark.streaming.stateful_ops import RUNNING_COUNTER
@@ -227,6 +228,11 @@ def test_run_stateful_no_leak_on_error(spark):
     )
     with _pytest.raises(ValueError, match="batch_col"):
         run_stateful(spark, src, ["user_id"], RUNNING_COUNTER, n_batches=2)
+    with _pytest.raises(ValueError, match="watermark"):
+        run_stateful(
+            spark, src, ["user_id"], RUNNING_COUNTER,
+            timeout_conf=GroupStateTimeout.EventTimeTimeout,
+        )
     # a mid-build failure (bad column) must also clean its own root
     with _pytest.raises(Exception):
         run_stateful(spark, src, ["no_such_column"], RUNNING_COUNTER)

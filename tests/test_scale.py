@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 
 from pyspark.sql import functions as F
@@ -62,8 +61,8 @@ def test_salted_join_matches_plain(spark):
     assert salted == plain
 
 
-def test_observed_watermark(spark):
-    stage = tempfile.mkdtemp()
+def test_observed_watermark(spark, tmp_path):
+    stage = str(tmp_path / "src")
     df = spark.createDataFrame([(60_000, "a")], "ts_ms long, word string")
     df.coalesce(1).write.mode("overwrite").parquet(stage)
     stream = (
@@ -80,7 +79,7 @@ def test_observed_watermark(spark):
         agg.writeStream.format("memory")
         .queryName(f"wm_{uuid.uuid4().hex[:8]}")
         .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp())
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     try:

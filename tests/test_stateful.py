@@ -1,7 +1,7 @@
 """Golden tests for the keyed stateful operators (FIXTURES.md F3-F6).
 
 Each fixture runs through the REAL production path: file stream →
-transformWithStateInPandas (RocksDB state store) → memory sink, via
+applyInPandasWithState (RocksDB state store) → memory sink, via
 streaming.harness.run_stateful. Multi-batch variants prove state
 survives micro-batch boundaries.
 """
@@ -183,13 +183,17 @@ def test_json_diff_identity(a):
 # --- cross-chunk ordering (ADVICE r1, medium) -------------------------------
 
 
-class _FakeValueState:
+class _FakeGroupState:
+    """The slice of Spark's GroupState that the keyed ops touch."""
+
     def __init__(self):
         self._v = None
 
+    @property
     def exists(self):
         return self._v is not None
 
+    @property
     def get(self):
         return self._v
 
@@ -197,57 +201,31 @@ class _FakeValueState:
         self._v = v
 
 
-class _FakeListState:
-    def __init__(self):
-        self._items = []
-
-    def get(self):
-        return list(self._items)
-
-    def put(self, items):
-        self._items = list(items)
-
-    def appendValue(self, v):
-        self._items.append(v)
-
-
-class _FakeHandle:
-    def getValueState(self, name, schema):
-        return _FakeValueState()
-
-    def getListState(self, name, schema):
-        return _FakeListState()
-
-
-def test_processor_sorts_across_arrow_chunks():
+@pytest.mark.parametrize(
+    "op, chunks, col, expected",
+    [
+        pytest.param(
+            RUNNING_COUNTER,
+            [{"seq": [5, 7, 6]}, {"seq": [2, 1, 3]}],
+            "clicks",
+            [(1, 1), (2, 2), (3, 3), (5, 4), (6, 5), (7, 6)],
+            id="running_counter",
+        ),
+        pytest.param(
+            EVENT_LIST,
+            [{"seq": [2], "event": ["b"]}, {"seq": [1], "event": ["a"]}],
+            "history",
+            [(1, "a"), (2, "a,b")],
+            id="event_list",
+        ),
+    ],
+)
+def test_op_sorts_across_arrow_chunks(op, chunks, col, expected):
     # One key's micro-batch rows arriving as MULTIPLE Arrow chunks must
-    # be stepped in global seq order, not chunk-local order. Chunk A
-    # holds the LATER seqs; per-chunk sorting would count them first.
+    # be stepped in global seq order, not chunk-local order. The first
+    # chunk holds the LATER seqs; per-chunk sorting would step them first.
     import pandas as pd
 
-    from demo_flink_spark.streaming.processors import RunningCounter
-
-    proc = RunningCounter()
-    proc.init(_FakeHandle())
-    chunk_late = pd.DataFrame({"seq": [5, 7, 6]})
-    chunk_early = pd.DataFrame({"seq": [2, 1, 3]})
-    [out] = list(
-        proc.handleInputRows(("u1",), iter([chunk_late, chunk_early]), None)
-    )
-    assert out["seq"].tolist() == [1, 2, 3, 5, 6, 7]
-    assert out["clicks"].tolist() == [1, 2, 3, 4, 5, 6]
-
-
-def test_event_list_processor_cross_chunk_history():
-    import pandas as pd
-
-    from demo_flink_spark.streaming.processors import EventListAccumulator
-
-    proc = EventListAccumulator()
-    proc.init(_FakeHandle())
-    chunk_late = pd.DataFrame({"seq": [2], "event": ["b"]})
-    chunk_early = pd.DataFrame({"seq": [1], "event": ["a"]})
-    [out] = list(
-        proc.handleInputRows(("u1",), iter([chunk_late, chunk_early]), None)
-    )
-    assert out["history"].tolist() == ["a", "a,b"]
+    pdfs = iter([pd.DataFrame(c) for c in chunks])
+    [out] = list(op.fn(("u1",), pdfs, _FakeGroupState()))
+    assert list(zip(out["seq"], out[col])) == expected

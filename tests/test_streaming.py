@@ -9,7 +9,6 @@ side output (W5) diverts exactly the too-late rows.
 from __future__ import annotations
 
 import socket
-import tempfile
 import threading
 import time
 import uuid
@@ -39,8 +38,8 @@ F2 = [
 ]
 
 
-def _write_batches(spark, rows, schema="b int, ts_ms long, word string"):
-    stage = tempfile.mkdtemp(prefix="stream_src_")
+def _write_batches(spark, tmp_path, rows, schema="b int, ts_ms long, word string"):
+    stage = str(tmp_path / "src")
     df = spark.createDataFrame(rows, schema)
     n_batches = df.select(F.max("b")).first()[0] + 1
     # FileStreamSource orders by mtime (path-tiebreak is a random UUID
@@ -65,8 +64,8 @@ def _with_ts(stream):
     return stream.withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
 
 
-def test_allowed_lateness_refire_and_silent_drop(spark):
-    stage, schema = _write_batches(spark, F2)
+def test_allowed_lateness_refire_and_silent_drop(spark, tmp_path):
+    stage, schema = _write_batches(spark, tmp_path, F2)
     stream = _with_ts(file_stream(spark, stage, schema))
     counts = windowed_count_stream(
         stream, ts_col="ts", key_col="word", watermark_delay="10 seconds"
@@ -76,7 +75,7 @@ def test_allowed_lateness_refire_and_silent_drop(spark):
         counts.writeStream.format("memory")
         .queryName(name)
         .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp())
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     try:
@@ -101,8 +100,8 @@ def test_allowed_lateness_refire_and_silent_drop(spark):
     assert final[("1970-01-01 00:00:30", "d")] == 1
 
 
-def test_late_router_side_output(spark):
-    stage, schema = _write_batches(spark, F2)
+def test_late_router_side_output(spark, tmp_path):
+    stage, schema = _write_batches(spark, tmp_path, F2)
     stream = _with_ts(file_stream(spark, stage, schema))
     on_time_rows, late_rows = [], []
     router = LateRouter(
@@ -117,7 +116,7 @@ def test_late_router_side_output(spark):
     )
     q = (
         stream.writeStream.foreachBatch(router)
-        .option("checkpointLocation", tempfile.mkdtemp())
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     try:
@@ -130,14 +129,14 @@ def test_late_router_side_output(spark):
     assert len(on_time_rows) == 6
 
 
-def test_streaming_dedup(spark):
+def test_streaming_dedup(spark, tmp_path):
     rows = [
         (0, 1000, "x"),
         (0, 1000, "x"),  # dup inside one batch
         (1, 1000, "x"),  # dup across batches (within watermark state)
         (1, 2000, "y"),
     ]
-    stage, schema = _write_batches(spark, rows)
+    stage, schema = _write_batches(spark, tmp_path, rows)
     stream = _with_ts(file_stream(spark, stage, schema))
     deduped = streaming_dedup(stream, ["word"], ts_col="ts")
     name = f"dedup_{uuid.uuid4().hex[:8]}"
@@ -145,7 +144,7 @@ def test_streaming_dedup(spark):
         deduped.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp())
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     try:
@@ -156,7 +155,7 @@ def test_streaming_dedup(spark):
     assert got == [(1000, "x"), (2000, "y")]
 
 
-def test_socket_source_wordcount(spark):
+def test_socket_source_wordcount(spark, tmp_path):
     """S1 parity: live socket server → socket source → rolling count."""
     server = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
     server.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
@@ -184,7 +183,7 @@ def test_socket_source_wordcount(spark):
         counts.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp())
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     try:
@@ -201,7 +200,7 @@ def test_socket_source_wordcount(spark):
         server.close()
 
 
-def test_streaming_session_window(spark):
+def test_streaming_session_window(spark, tmp_path):
     """Session windows under real streaming: in-batch session merging,
     watermark-driven finalization (append mode only emits a session
     once the watermark passes its end), and still-open sessions held
@@ -223,7 +222,9 @@ def test_streaming_session_window(spark):
         (2, 70000, "u3"),
         (3, 100000, "u3"),
     ]
-    stage, schema = _write_batches(spark, rows, schema="b int, ts_ms long, word string")
+    stage, schema = _write_batches(
+        spark, tmp_path, rows, schema="b int, ts_ms long, word string"
+    )
     stream = _with_ts(file_stream(spark, stage, schema)).withColumnRenamed(
         "word", "user"
     )
@@ -236,7 +237,7 @@ def test_streaming_session_window(spark):
         sessions.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp())
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     try:
@@ -255,7 +256,7 @@ def test_streaming_session_window(spark):
     ]
 
 
-def test_streaming_windowed_topn_matches_batch(spark):
+def test_streaming_windowed_topn_matches_batch(spark, tmp_path):
     """Streaming Top-N (the Flink TopN pattern): complete-mode windowed
     counts re-ranked per micro-batch in foreachBatch; after the final
     batch the snapshot equals the batch windowed-TopN computation. Two
@@ -273,7 +274,9 @@ def test_streaming_windowed_topn_matches_batch(spark):
         (1, 6 * H // 8, "u3"),
         (1, H + 2000, "u2"),
     ]
-    stage, schema = _write_batches(spark, rows, "b int, ts_ms long, user string")
+    stage, schema = _write_batches(
+        spark, tmp_path, rows, "b int, ts_ms long, user string"
+    )
     stream = _with_ts(file_stream(spark, stage, schema))
     counts = stream.groupBy(F.window("ts", "1 hour").alias("w"), "user").count()
 
@@ -317,7 +320,7 @@ def test_streaming_windowed_topn_matches_batch(spark):
     assert (w0, "u1", 2, 1) in snapshots[0]
 
 
-def test_ohlc_stream_matches_batch_twin(spark):
+def test_ohlc_stream_matches_batch_twin(spark, tmp_path):
     from demo_flink_spark.operators.timeseries import ohlc_bars
     from demo_flink_spark.streaming.windows import ohlc_bars_stream
 
@@ -339,7 +342,10 @@ def test_ohlc_stream_matches_batch_twin(spark):
         (1, 7, base + 910_000, "x", 4.0),
     ]
     stage, schema = _write_batches(
-        spark, rows, "b int, event_id long, ts_ms long, event_type string, value double"
+        spark,
+        tmp_path,
+        rows,
+        "b int, event_id long, ts_ms long, event_type string, value double",
     )
     stream = _with_ts(file_stream(spark, stage, schema))
     bars = ohlc_bars_stream(stream, watermark_delay="30 minutes")
@@ -348,7 +354,7 @@ def test_ohlc_stream_matches_batch_twin(spark):
         bars.writeStream.format("memory")
         .queryName(name)
         .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp())
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     try:

@@ -4,7 +4,6 @@ leave the state store after event-time inactivity; live keys don't."""
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 import uuid
 
@@ -33,7 +32,7 @@ def _staged(spark, rows, tmp):
     )
 
 
-def test_inactivity_flush_fires_on_watermark_and_clears_state(spark):
+def test_inactivity_flush_fires_on_watermark_and_clears_state(spark, tmp_path):
     rows = [
         # u1: two events, then silence -> must flush (n=2, sum=3.0)
         (0, 1_000, "u1", 1.0),
@@ -48,30 +47,29 @@ def test_inactivity_flush_fires_on_watermark_and_clears_state(spark):
         (3, 100_000, "u4", 0.0),
         (4, 140_000, "u4", 0.0),
     ]
-    with tempfile.TemporaryDirectory() as d:
-        stream = _staged(spark, rows, f"{d}/src").withColumn(
-            "ts", F.timestamp_millis(F.col("ts_ms"))
-        )
-        flushes = inactivity_flush_stream(stream, gap_ms=10_000)
-        name = f"flush_{uuid.uuid4().hex[:8]}"
-        q = (
-            flushes.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp())
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        got = {
-            r["user_id"]: (r["n_events"], r["sum_value"])
-            for r in spark.table(name).collect()
-        }
-        # quiet keys flushed with their full accumulation
-        assert got["u1"] == (2, 3.0)
-        assert got["u2"] == (2, 12.0)
-        assert got["u3"] == (1, 0.0)  # sentinel itself times out later
-        # still-live keys (timers not yet passed by the watermark) held
-        assert "u4" not in got
+    stream = _staged(spark, rows, str(tmp_path / "src")).withColumn(
+        "ts", F.timestamp_millis(F.col("ts_ms"))
+    )
+    flushes = inactivity_flush_stream(stream, gap_ms=10_000)
+    name = f"flush_{uuid.uuid4().hex[:8]}"
+    q = (
+        flushes.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    got = {
+        r["user_id"]: (r["n_events"], r["sum_value"])
+        for r in spark.table(name).collect()
+    }
+    # quiet keys flushed with their full accumulation
+    assert got["u1"] == (2, 3.0)
+    assert got["u2"] == (2, 12.0)
+    assert got["u3"] == (1, 0.0)  # sentinel itself times out later
+    # still-live keys (timers not yet passed by the watermark) held
+    assert "u4" not in got

@@ -6,25 +6,28 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== 1/7 registry import guard"
+echo "== 1/8 registry import guard"
 python -m pytest tests/test_registry.py -q
 
-echo "== 2/7 full test suite"
+echo "== 2/8 benchmark unit tests (perfbench/)"
+python -m pytest perfbench/tests -q
+
+echo "== 3/8 full test suite"
 python -m pytest tests/ -q
 
-echo "== 3/7 oracle result-type lint (no HUGEINT/exotic types in any oracle output)"
+echo "== 4/8 oracle result-type lint (no HUGEINT/exotic types in any oracle output)"
 python tools/oracle_check.py --typelint /root/testdata/sf0.01
 
-echo "== 4/7 oracle gate (sf0.01, every declared query vs DuckDB)"
+echo "== 5/8 oracle gate (sf0.01, every declared query vs DuckDB)"
 python tools/oracle_check.py /root/testdata/sf0.01
 
-echo "== 5/7 plan audit (includes srclint sum-over-hash)"
+echo "== 6/8 plan audit (includes srclint sum-over-hash)"
 python tools/plan_audit.py
 
-echo "== 6/7 shuffle-partition shake (iterative/ANSI-overflow-prone queries)"
+echo "== 7/8 shuffle-partition shake (iterative/ANSI-overflow-prone queries)"
 python tools/oracle_check.py --shake /root/testdata/sf0.01
 
-echo "== 7/7 bench (fails loudly on any query error)"
+echo "== 8/8 bench (fails loudly on any query error)"
 python bench.py
 
 echo "CI: all gates green"
