@@ -117,8 +117,6 @@ def trade_change_detection(
     `console_sink` (≈ .print()) or `kafka_sink` (the production note at
     `TradeChangeDetectionJob.java:48`). Requires the Kafka connector.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from demo_flink_spark.sources.streams import kafka_available
 
     if not kafka_available(spark):
@@ -148,10 +146,4 @@ def trade_change_detection(
         .alias("seq"),
         F.col("value").cast("string").alias("value"),
     )
-    return keyed.groupBy("trade_id").applyInPandasWithState(
-        CDC_DETECTOR.fn,
-        outputStructType=CDC_DETECTOR.output_schema,
-        stateStructType=CDC_DETECTOR.state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return CDC_DETECTOR.apply(keyed.groupBy("trade_id"))

@@ -193,7 +193,7 @@ def token_budget_cut(
         F.col(group_col).alias("grp"),
         F.size(toks).cast("long").alias("n_tokens"),
         F.coalesce(
-            budget_map.getItem(F.col(group_col)), F.lit(-1)
+            budget_map[F.col(group_col)], F.lit(-1)
         ).cast("long").alias("budget"),
         rank_key.alias("_rk"),
     )

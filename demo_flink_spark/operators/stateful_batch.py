@@ -232,8 +232,8 @@ def cdc_lag_diff(df: DataFrame, key_col: str, seq_col: str, json_col: str) -> Da
     exploded = lagged.select(
         "key", "seq", "m", "prev_m", F.explode(keys).alias("field")
     )
-    old_v = F.col("prev_m").getItem(F.col("field"))
-    new_v = F.col("m").getItem(F.col("field"))
+    old_v = F.col("prev_m")[F.col("field")]
+    new_v = F.col("m")[F.col("field")]
     return exploded.select(
         "key",
         "seq",

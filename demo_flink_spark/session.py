@@ -19,6 +19,11 @@ harness:
   one state store per partition per micro-batch, and a fixed 32 on a
   4-core host made the keyed-state CDC stream's batches ~4-5x slower
   (SCALING.md).
+- **Joins on Spark's default strategy**: sort-merge is preferred over
+  shuffled-hash. Preferring shuffled-hash measured within noise on
+  `sql_dedup` (throughput 1.397 vs 1.388 /s, p50 0.561 vs 0.536 s) and
+  trades sort-merge's spill for an OOM when the planner under-estimates
+  a build side.
 - **RocksDB state with changelog checkpointing**: a micro-batch commit
   writes the batch's changelog instead of a full snapshot, which roughly
   halved the CDC stream's commit time (SCALING.md).
@@ -84,22 +89,6 @@ def get_spark(
         .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
         # --- broadcast joins for dimension tables (small side < 32 MiB) ---
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # --- allow shuffled-hash when its size conditions hold (guide
-        #     §3.1/§9): hash beats sort-merge's per-partition sort when
-        #     one side's partitions fit in memory; the planner's
-        #     canBuildLocalHashMap guard and AQE still fall back to
-        #     sort-merge otherwise. r14 A/B over 12 mixed queries:
-        #     median 19.7 s -> 18.5 s (within box noise, adopted as the
-        #     documented-safe default, not as a measured-win claim).
-        #     The guard is estimate-based, so a badly under-estimated
-        #     build side OOMs where sort-merge would spill — on a
-        #     deployment where that tail risk outweighs the sort
-        #     savings, set SPARK_GRAFT_PREFER_SMJ=true to restore
-        #     Spark's default (parameterised, not buried) ---
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
         # --- ANSI off: match the permissive semantics of the oracle data ---
         .config("spark.sql.ansi.enabled", "false")
         # --- session timezone pinned so timestamp semantics match DuckDB ---

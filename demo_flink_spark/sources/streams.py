@@ -3,7 +3,8 @@
 Parity map:
 - S1 socket text source  (`WindowWordCount.java:18`)        → `socket_lines`
 - S2/S3 in-memory source (`UserClickCounter.java:19-26`)    → batch
-  `spark.createDataFrame` or the file-drop stream in `streaming.harness`
+  `spark.createDataFrame`, or frames staged as a file-drop stream by
+  `streaming.harness.stage_batches` and read by `file_stream`
 - S4 Kafka source        (`TradeChangeDetectionJob.java:31-41`) → `kafka_stream`
 - S5 print sink          (`stream.print()`)                  → `console_sink`
 - Kafka sink (the reference's "in production you'd write to another

@@ -10,6 +10,8 @@ declarative (`spark.read.parquet`) and Catalyst prunes them.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
 import shutil
 import tempfile
@@ -55,17 +57,25 @@ def ensure_session(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     try:
-        zip_base = os.path.join(
-            tempfile.mkdtemp(prefix="dfs_pyfiles_"), "demo_flink_spark"
-        )
-        zip_path = shutil.make_archive(zip_base, "zip", os.path.dirname(pkg_dir),
-                                       os.path.basename(pkg_dir))
-        spark.sparkContext.addPyFile(zip_path)
+        spark.sparkContext.addPyFile(_package_zip())
     except Exception:  # noqa: BLE001 — best-effort; PYTHONPATH may already cover it
         pass
     spark._dfs_session_ready = True
+
+
+@functools.cache
+def _package_zip() -> str:
+    """The package source as a zip for `addPyFile`: built once per
+    process in a temp dir that is removed at interpreter exit, so
+    every session of the process ships the same file and none leaks."""
+    pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmp = tempfile.mkdtemp(prefix="dfs_pyfiles_")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    return shutil.make_archive(
+        os.path.join(tmp, "demo_flink_spark"), "zip",
+        os.path.dirname(pkg_dir), os.path.basename(pkg_dir),
+    )
 
 
 # Session-scoped table-HANDLE cache. Every `spark.read.parquet` call

@@ -20,6 +20,9 @@ from dataclasses import dataclass
 from typing import Callable
 
 import pandas as pd
+from pyspark.sql import DataFrame
+from pyspark.sql.group import GroupedData
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from demo_flink_spark.functions.state_kernels import (
     FraudState,
@@ -40,6 +43,19 @@ class StatefulOp:
     fn: Callable[..., Iterator[pd.DataFrame]]
     output_schema: str
     state_schema: str
+
+    def apply(
+        self, grouped: GroupedData, timeout_conf: str = GroupStateTimeout.NoTimeout
+    ) -> DataFrame:
+        """Run this op over a keyed stream (`stream.groupBy(key)`),
+        emitting its output rows in append mode."""
+        return grouped.applyInPandasWithState(
+            self.fn,
+            outputStructType=self.output_schema,
+            stateStructType=self.state_schema,
+            outputMode="append",
+            timeoutConf=timeout_conf,
+        )
 
 
 # --- ST4: running counter (`UserClickCounter.java:39-61`) -------------------

@@ -5,10 +5,9 @@ parity by construction (the batch operator IS the rule engine)."""
 
 from __future__ import annotations
 
-import os
-import time
-
+from demo_flink_spark.sources.streams import file_stream
 from demo_flink_spark.streaming.curation_stream import curation_gate
+from demo_flink_spark.streaming.harness import stage_batches
 
 GOOD = (
     "the quick brown fox jumps over a lazy dog and then runs far away "
@@ -17,43 +16,18 @@ GOOD = (
 TOO_SHORT = "the and also tiny docs"
 NUMERIC = "the a " + " ".join(str(1000 + n) for n in range(30))
 NO_STOPWORDS = " ".join(f"word{i}" for i in range(30))
-
-
-def _drop_batches(spark, batches, stage_dir):
-    """Stage source files under the caller's pytest tmp_path so the
-    directory is cleaned up with the test (ADVICE r10 pattern: the
-    mkdtemp form leaked a source dir per run)."""
-    stage = str(stage_dir)
-    os.makedirs(stage, exist_ok=True)
-    base = time.time() - len(batches) - 1
-    stamped: set[str] = set()
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-            1
-        ).write.mode("append").parquet(stage)
-        for fname in os.listdir(stage):
-            if fname.endswith(".parquet") and fname not in stamped:
-                os.utime(os.path.join(stage, fname), (base + i, base + i))
-                stamped.add(fname)
-    return stage
+DOCS = "doc_id long, text string"
 
 
 def test_curation_gate_routes_and_reasons(spark, tmp_path):
     kept_dir = str(tmp_path / "kept")
     rejected_dir = str(tmp_path / "rejected")
-    stage = _drop_batches(
-        spark,
-        [
-            [(1, GOOD), (2, TOO_SHORT)],
-            [(3, NUMERIC), (4, NO_STOPWORDS), (5, GOOD + " again ok")],
-        ],
-        tmp_path / "src",
-    )
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    batches = [
+        [(1, GOOD), (2, TOO_SHORT)],
+        [(3, NUMERIC), (4, NO_STOPWORDS), (5, GOOD + " again ok")],
+    ]
+    frames = [spark.createDataFrame(rows, DOCS) for rows in batches]
+    stream = file_stream(spark, stage_batches(frames, tmp_path / "src"), DOCS)
     q = curation_gate(stream, kept_dir, rejected_dir, min_words=20)
     try:
         q.processAllAvailable()
@@ -77,8 +51,8 @@ def test_curation_gate_multi_reason(spark, tmp_path):
     kept_dir = str(tmp_path / "k2")
     rejected_dir = str(tmp_path / "r2")
     # short AND no stopwords AND numeric-heavy: all reasons listed
-    stage = _drop_batches(spark, [[(9, "111 222 333")]], tmp_path / "src")
-    stream = spark.readStream.schema("doc_id long, text string").parquet(stage)
+    frames = [spark.createDataFrame([(9, "111 222 333")], DOCS)]
+    stream = file_stream(spark, stage_batches(frames, tmp_path / "src"), DOCS)
     q = curation_gate(stream, kept_dir, rejected_dir, min_words=20)
     try:
         q.processAllAvailable()
@@ -96,15 +70,15 @@ def test_curation_gate_epoch_replay_is_idempotent(spark, tmp_path):
 
     kept_dir = str(tmp_path / "k3")
     rejected_dir = str(tmp_path / "r3")
-    stage = _drop_batches(spark, [[(1, GOOD), (2, TOO_SHORT)]], tmp_path / "src")
-    stream = spark.readStream.schema("doc_id long, text string").parquet(stage)
+    frames = [spark.createDataFrame([(1, GOOD), (2, TOO_SHORT)], DOCS)]
+    stream = file_stream(spark, stage_batches(frames, tmp_path / "src"), DOCS)
     q = cs.curation_gate(stream, kept_dir, rejected_dir, min_words=20)
     try:
         q.processAllAvailable()
     finally:
         q.stop()
     batch_df = spark.createDataFrame(
-        [(1, GOOD), (2, TOO_SHORT)], "doc_id long, text string"
+        [(1, GOOD), (2, TOO_SHORT)], DOCS
     )
     # replay epoch 0 by invoking the same writer path directly
     import inspect

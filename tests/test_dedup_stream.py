@@ -5,15 +5,14 @@ dedup against batch 1 docs, not just the seeded history."""
 
 from __future__ import annotations
 
-import os
-import time
-
 from pyspark.sql import functions as F
 
+from demo_flink_spark.sources.streams import file_stream
 from demo_flink_spark.streaming.dedup_stream import (
     incremental_lsh_dedup,
     seed_index,
 )
+from demo_flink_spark.streaming.harness import stage_batches
 
 HIST_1 = (
     "the quick brown fox jumps over the lazy dog while the moon rises "
@@ -31,6 +30,7 @@ LATER_UNIQUE = (
     "yet another topic entirely concerning mountain hiking trails "
     "weather patterns and alpine flowers blooming in spring"
 )
+DOCS = "doc_id long, text string"
 
 
 def _near_copy(text: str) -> str:
@@ -38,47 +38,19 @@ def _near_copy(text: str) -> str:
     return text.rsplit(" ", 1)[0] + " yesterday"
 
 
-def _drop_batches(spark, batches, stage_dir):
-    """Stage source files under the caller's pytest tmp_path so the
-    directory is cleaned up with the test (ADVICE r10 pattern: the
-    mkdtemp form leaked a source dir per run)."""
-    stage = str(stage_dir)
-    os.makedirs(stage, exist_ok=True)
-    base = time.time() - len(batches) - 1
-    stamped: set[str] = set()
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-            1
-        ).write.mode("append").parquet(stage)
-        for fname in os.listdir(stage):
-            if fname.endswith(".parquet") and fname not in stamped:
-                os.utime(os.path.join(stage, fname), (base + i, base + i))
-                stamped.add(fname)
-    return stage
-
-
 def test_incremental_dedup_grows_index(spark, tmp_path):
     index_dir = str(tmp_path / "index")
     verdict_dir = str(tmp_path / "verdicts")
 
-    history = spark.createDataFrame(
-        [(1, HIST_1), (2, HIST_2)], "doc_id long, text string"
-    )
+    history = spark.createDataFrame([(1, HIST_1), (2, HIST_2)], DOCS)
     seed_index(history, index_dir)
 
-    stage = _drop_batches(
-        spark,
-        [
-            [(10, _near_copy(HIST_1)), (11, NEW_UNIQUE)],
-            [(12, _near_copy(NEW_UNIQUE)), (13, LATER_UNIQUE)],
-        ],
-        tmp_path / "src",
-    )
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    batches = [
+        [(10, _near_copy(HIST_1)), (11, NEW_UNIQUE)],
+        [(12, _near_copy(NEW_UNIQUE)), (13, LATER_UNIQUE)],
+    ]
+    frames = [spark.createDataFrame(rows, DOCS) for rows in batches]
+    stream = file_stream(spark, stage_batches(frames, tmp_path / "src"), DOCS)
     q = incremental_lsh_dedup(stream, index_dir, verdict_dir, threshold=0.4)
     try:
         q.processAllAvailable()
@@ -106,20 +78,14 @@ def test_intra_batch_duplicates_resolve_to_lower_id(spark, tmp_path):
     index_dir = str(tmp_path / "index")
     verdict_dir = str(tmp_path / "verdicts")
     seed_index(
-        spark.createDataFrame([(1, HIST_1)], "doc_id long, text string"),
+        spark.createDataFrame([(1, HIST_1)], DOCS),
         index_dir,
     )
     # both near-copies of each other arrive in ONE micro-batch
-    stage = _drop_batches(
-        spark,
-        [[(20, NEW_UNIQUE), (21, _near_copy(NEW_UNIQUE))]],
-        tmp_path / "src",
-    )
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    frames = [
+        spark.createDataFrame([(20, NEW_UNIQUE), (21, _near_copy(NEW_UNIQUE))], DOCS)
+    ]
+    stream = file_stream(spark, stage_batches(frames, tmp_path / "src"), DOCS)
     q = incremental_lsh_dedup(stream, index_dir, verdict_dir, threshold=0.4)
     try:
         q.processAllAvailable()
@@ -139,12 +105,12 @@ def test_epoch_replay_idempotent(spark, tmp_path):
     index_dir = str(tmp_path / "idx")
     verdict_dir = str(tmp_path / "v")
     seed_index(
-        spark.createDataFrame([(1, HIST_1)], "doc_id long, text string"),
+        spark.createDataFrame([(1, HIST_1)], DOCS),
         index_dir,
     )
     batch = spark.createDataFrame(
         [(10, _near_copy(HIST_1)), (11, NEW_UNIQUE)],
-        "doc_id long, text string",
+        DOCS,
     )
     process_dedup_batch(batch, 0, index_dir, verdict_dir, threshold=0.4)
     first_v = sorted(
@@ -164,7 +130,7 @@ def test_epoch_replay_idempotent(spark, tmp_path):
     assert spark.read.parquet(index_dir).count() == first_idx
     # a LATER epoch still sees epoch-0 novel docs as history
     batch2 = spark.createDataFrame(
-        [(12, _near_copy(NEW_UNIQUE))], "doc_id long, text string"
+        [(12, _near_copy(NEW_UNIQUE))], DOCS
     )
     process_dedup_batch(batch2, 1, index_dir, verdict_dir, threshold=0.4)
     v = {r.doc_id: r for r in spark.read.parquet(verdict_dir).collect()}

@@ -29,11 +29,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from demo_flink_spark.sources.streams import file_stream
 from demo_flink_spark.streaming.dedup_stream import (
     incremental_lsh_dedup,
     process_dedup_batch,
     seed_index,
 )
+from demo_flink_spark.streaming.harness import stage_batches
 
 WORDS = (
     "alpha bravo charlie delta echo foxtrot golf hotel india juliet "
@@ -282,9 +284,6 @@ def test_real_streaming_query_with_guard(spark, tmp_path):
     """The guard through the REAL streaming entry point (foreachBatch
     via incremental_lsh_dedup, file-drop source): same template
     detection and stats sidecar as the direct-batch receipts above."""
-    import os
-    import time
-
     index_dir = str(tmp_path / "idx")
     verdict_dir = str(tmp_path / "v")
     stats_dir = str(tmp_path / "s")
@@ -295,27 +294,13 @@ def test_real_streaming_query_with_guard(spark, tmp_path):
         ),
         index_dir,
     )
-    stage = str(tmp_path / "src")
-    os.makedirs(stage, exist_ok=True)
     batches = [
         [(100 + i, f"{TEMPLATE} #{i}!") for i in range(6)],
         [(200 + i, f"{TEMPLATE} #{i + 6}?") for i in range(6)],
     ]
-    base = time.time() - 3
-    stamped: set[str] = set()
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-            1
-        ).write.mode("append").parquet(stage)
-        for fname in os.listdir(stage):
-            if fname.endswith(".parquet") and fname not in stamped:
-                os.utime(os.path.join(stage, fname), (base + i, base + i))
-                stamped.add(fname)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    schema = "doc_id long, text string"
+    frames = [spark.createDataFrame(rows, schema) for rows in batches]
+    stream = file_stream(spark, stage_batches(frames, tmp_path / "src"), schema)
     q = incremental_lsh_dedup(
         stream, index_dir, verdict_dir, threshold=0.4,
         bucket_cap=3, overflow="star", stats_dir=stats_dir,

@@ -8,31 +8,12 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from demo_flink_spark.sources.streams import file_stream
 from demo_flink_spark.sources.tables import load_table
+from demo_flink_spark.streaming.harness import stage_batches
 from demo_flink_spark.streaming.materialized import IncrementalAggSink, incremental_agg_sink
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _staged_batches(spark, df, batch_col, tmp):
-    import time
-
-    n = df.select(F.max(batch_col)).first()[0] + 1
-    base = time.time() - n - 1
-    stamped: set[str] = set()
-    for b in range(n):
-        df.filter(F.col(batch_col) == b).drop(batch_col).coalesce(1).write.mode(
-            "append"
-        ).parquet(tmp)
-        for fname in os.listdir(tmp):
-            if fname.endswith(".parquet") and fname not in stamped:
-                os.utime(os.path.join(tmp, fname), (base + b, base + b))
-                stamped.add(fname)
-    return (
-        spark.readStream.schema(df.drop(batch_col).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(tmp)
-    )
 
 
 def test_incremental_agg_matches_batch_groupby(spark):
@@ -43,7 +24,9 @@ def test_incremental_agg_matches_batch_groupby(spark):
         "event_type", "value", (F.col("event_id") % 3).cast("int").alias("b")
     )
     with tempfile.TemporaryDirectory() as d:
-        stream = _staged_batches(spark, ev, "b", f"{d}/src")
+        frames = [ev.filter(F.col("b") == b).drop("b") for b in range(3)]
+        stage = stage_batches(frames, f"{d}/src")
+        stream = file_stream(spark, stage, frames[0].schema)
         q, sink = incremental_agg_sink(
             stream,
             spark,
@@ -127,7 +110,9 @@ def test_upsert_sink_last_write_wins_and_deletes(spark):
         rows, "b int, seq long, key string, val long, deleted boolean"
     )
     with tempfile.TemporaryDirectory() as d:
-        stream = _staged_batches(spark, df, "b", f"{d}/src")
+        frames = [df.filter(F.col("b") == b).drop("b") for b in range(2)]
+        stage = stage_batches(frames, f"{d}/src")
+        stream = file_stream(spark, stage, frames[0].schema)
         q, sink = upsert_sink(
             stream,
             spark,

@@ -21,10 +21,10 @@ batch. This file pins the exact relationship:
 
 from __future__ import annotations
 
-import os
-import time
-
 from pyspark.sql import functions as F
+
+from demo_flink_spark.sources.streams import file_stream
+from demo_flink_spark.streaming.harness import stage_batches
 
 # Flink reference sequence for the F5 click stream: .keyBy(user).sum
 # emits (user, new_total) on every record, in record order.
@@ -46,34 +46,19 @@ PER_RECORD_EMISSIONS = [
 ]
 
 
-def _stage_batches(spark, tmp_path, batch_of: list[int]) -> str:
-    """One parquet file per batch index, mtime-ordered so the
-    FileStreamSource replays them in batch order."""
-    stage = str(tmp_path / "src")
-    rows = [(b, u) for b, (u,) in zip(batch_of, CLICKS)]
-    df = spark.createDataFrame(rows, "b int, user_id string")
-    base = time.time() - len(set(batch_of)) - 1
-    stamped: set[str] = set()
-    for b in sorted(set(batch_of)):
-        df.filter(F.col("b") == b).drop("b").coalesce(1).write.mode(
-            "append"
-        ).parquet(stage)
-        for fname in os.listdir(stage):
-            if fname.endswith(".parquet") and fname not in stamped:
-                os.utime(os.path.join(stage, fname), (base + b, base + b))
-                stamped.add(fname)
-    return stage
+def _stage(spark, tmp_path, batch_of: list[int]) -> str:
+    """Stage CLICKS with record i in micro-batch `batch_of[i]`."""
+    df = spark.createDataFrame(
+        [(b, u) for b, (u,) in zip(batch_of, CLICKS)], "b int, user_id string"
+    )
+    frames = [df.filter(F.col("b") == b).drop("b") for b in sorted(set(batch_of))]
+    return stage_batches(frames, tmp_path / "src")
 
 
 def _update_mode_emissions(spark, stage: str) -> list[list[tuple[str, int]]]:
     """Run groupBy().count() in update mode, one file per trigger;
     return each micro-batch's emitted (user, total) rows."""
-    stream = (
-        spark.readStream.schema("user_id string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    counts = stream.groupBy("user_id").agg(
+    counts = file_stream(spark, stage, "user_id string").groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("clicks")
     )
     emissions: list[list[tuple[str, int]]] = []
@@ -96,7 +81,7 @@ def _update_mode_emissions(spark, stage: str) -> list[list[tuple[str, int]]]:
 def test_coarse_batches_coalesce_intermediate_totals(spark, tmp_path):
     # 2 batches of 3 records: user1's intermediate total (1) never
     # appears — the same-batch coalescing Flink users must expect
-    stage = _stage_batches(spark, tmp_path, [0, 0, 0, 1, 1, 1])
+    stage = _stage(spark, tmp_path, [0, 0, 0, 1, 1, 1])
     got = _update_mode_emissions(spark, stage)
     assert got == [
         [("user1", 2), ("user2", 1)],
@@ -109,7 +94,7 @@ def test_coarse_batches_coalesce_intermediate_totals(spark, tmp_path):
 def test_one_record_batches_reproduce_flink_sequence(spark, tmp_path):
     # 6 batches of 1 record: update mode emits Flink's per-record
     # sequence exactly, in order
-    stage = _stage_batches(spark, tmp_path, list(range(len(CLICKS))))
+    stage = _stage(spark, tmp_path, list(range(len(CLICKS))))
     got = _update_mode_emissions(spark, stage)
     assert [rows[0] for rows in got] == PER_RECORD_EMISSIONS
     assert all(len(rows) == 1 for rows in got)

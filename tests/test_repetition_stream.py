@@ -5,10 +5,9 @@ execution modes, and this test proves the modes cannot diverge."""
 
 from __future__ import annotations
 
-import os
-import time
-
 from demo_flink_spark.operators.textstats import remove_repeated_ngrams
+from demo_flink_spark.sources.streams import file_stream
+from demo_flink_spark.streaming.harness import stage_batches
 from demo_flink_spark.streaming.repetition_stream import (
     repetition_removal_stream,
 )
@@ -18,25 +17,7 @@ REPEATY = "a b c d e X a b c d e Y"
 CLEAN = "the quick brown fox jumps over the lazy dog tonight"
 SHORT = "too few"  # < n tokens: nothing to window, nothing removed
 DEGENERATE = "w w w w w w w w w w"  # every window repeats window 0
-
-
-def _drop_batches(spark, batches, stage_dir):
-    """Stage source files under the caller's pytest tmp_path so the
-    directory is cleaned up with the test (ADVICE r10: the mkdtemp
-    form leaked a repetition_src_* dir per run)."""
-    stage = str(stage_dir)
-    os.makedirs(stage, exist_ok=True)
-    base = time.time() - len(batches) - 1
-    stamped: set[str] = set()
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-            1
-        ).write.mode("append").parquet(stage)
-        for fname in os.listdir(stage):
-            if fname.endswith(".parquet") and fname not in stamped:
-                os.utime(os.path.join(stage, fname), (base + i, base + i))
-                stamped.add(fname)
-    return stage
+DOCS = "doc_id long, text string"
 
 
 def test_repetition_stream_matches_batch_exactly(spark, tmp_path):
@@ -44,13 +25,9 @@ def test_repetition_stream_matches_batch_exactly(spark, tmp_path):
         [(1, REPEATY), (2, CLEAN)],
         [(3, SHORT), (4, DEGENERATE)],
     ]
-    stage = _drop_batches(spark, batches, tmp_path / "src")
+    frames = [spark.createDataFrame(rows, DOCS) for rows in batches]
+    stream = file_stream(spark, stage_batches(frames, tmp_path / "src"), DOCS)
     out_dir = str(tmp_path / "cleaned")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
     q = repetition_removal_stream(
         stream, out_dir, checkpoint_dir=str(tmp_path / "ckpt")
     )
@@ -64,7 +41,7 @@ def test_repetition_stream_matches_batch_exactly(spark, tmp_path):
     got = sorted(map(tuple, spark.read.parquet(out_dir).collect()))
     all_rows = [r for b in batches for r in b]
     want_df = remove_repeated_ngrams(
-        spark.createDataFrame(all_rows, "doc_id long, text string")
+        spark.createDataFrame(all_rows, DOCS)
     )
     want = sorted(map(tuple, want_df.collect()))
     assert got == want  # exact parity, not just counts

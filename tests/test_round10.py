@@ -146,39 +146,29 @@ def test_repetition_stream_default_checkpoint_resumes(spark, tmp_path):
     offset log, not reprocess and duplicate — and the underscore dir
     must stay invisible to the parquet reader."""
     import os
-    import time as _t
 
+    from demo_flink_spark.sources.streams import file_stream
+    from demo_flink_spark.streaming.harness import stage_batches
     from demo_flink_spark.streaming.repetition_stream import (
         repetition_removal_stream,
     )
 
+    schema = "doc_id long, text string"
     stage = str(tmp_path / "src")
-    os.makedirs(stage)
     out_dir = str(tmp_path / "out")
 
-    def drop(rows, mtime):
-        before = set(os.listdir(stage))
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-            1
-        ).write.mode("append").parquet(stage)
-        for f in set(os.listdir(stage)) - before:
-            os.utime(os.path.join(stage, f), (mtime, mtime))
-
-    def run_once():
-        stream = spark.readStream.schema("doc_id long, text string").parquet(
-            stage
+    def run_once(rows):
+        stage_batches([spark.createDataFrame(rows, schema)], stage)
+        q = repetition_removal_stream(  # default ckpt
+            file_stream(spark, stage, schema), out_dir
         )
-        q = repetition_removal_stream(stream, out_dir)  # default ckpt
         try:
             q.processAllAvailable()
         finally:
             q.stop()
 
-    base = _t.time() - 10
-    drop([(1, "a b c d e X a b c d e Y"), (2, "clean text")], base)
-    run_once()
-    drop([(3, "w w w w w w w w w w")], base + 1)
-    run_once()  # restart: must pick up ONLY doc 3
+    run_once([(1, "a b c d e X a b c d e Y"), (2, "clean text")])
+    run_once([(3, "w w w w w w w w w w")])  # restart: must pick up ONLY doc 3
 
     rows = spark.read.parquet(out_dir).collect()
     assert sorted(r.doc_id for r in rows) == [1, 2, 3]  # no duplicates

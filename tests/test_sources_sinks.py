@@ -15,6 +15,7 @@ import time
 from pyspark.sql import functions as F
 
 from demo_flink_spark.sources.streams import (
+    file_stream,
     foreach_batch_sink,
     memory_sink,
     parquet_sink,
@@ -29,17 +30,9 @@ from demo_flink_spark.sources.tables import (
     write_orc,
     write_partitioned,
 )
+from demo_flink_spark.streaming.harness import stage_batches
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _staged_stream(spark, df, tmp):
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    return (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(tmp)
-    )
 
 
 def test_streaming_parquet_sink_exactly_once_listing(spark):
@@ -49,9 +42,8 @@ def test_streaming_parquet_sink_exactly_once_listing(spark):
     n_in = ev.count()
     with tempfile.TemporaryDirectory() as d:
         src, out, ckpt = f"{d}/src", f"{d}/out", f"{d}/ckpt"
-        q = parquet_sink(
-            _staged_stream(spark, ev, src), out, ckpt, trigger_available_now=True
-        )
+        stream = file_stream(spark, stage_batches([ev], src), ev.schema)
+        q = parquet_sink(stream, out, ckpt, trigger_available_now=True)
         q.awaitTermination(120)
         got = spark.read.parquet(out)
         assert got.count() == n_in
@@ -72,7 +64,7 @@ def test_foreach_batch_sink_sees_all_rows(spark):
 
     with tempfile.TemporaryDirectory() as d:
         q = foreach_batch_sink(
-            _staged_stream(spark, ev, f"{d}/src"),
+            file_stream(spark, stage_batches([ev], f"{d}/src"), ev.schema),
             collect_batch,
             f"{d}/ckpt",
             availableNow=True,
@@ -221,3 +213,56 @@ def test_clear_table_handles_fences_in_flight_load():
     first = tables.load_table(s, "/sf", "orders")
     assert tables.load_table(s, "/sf", "orders") != first
     assert tables.load_table(s, "/sf", "orders") == ("/sf/orders.parquet", 2)
+
+
+# Two fake sessions in a fresh interpreter: ensure_session needs only
+# conf.set and sparkContext.addPyFile.
+_TWO_SESSIONS = """
+import glob, os, tempfile
+from demo_flink_spark.sources.tables import ensure_session
+
+class _Conf:
+    def set(self, key, value):
+        pass
+
+class _Context:
+    def __init__(self):
+        self.py_files = []
+
+    def addPyFile(self, path):
+        self.py_files.append(path)
+
+class _Session:
+    def __init__(self):
+        self.conf, self.sparkContext = _Conf(), _Context()
+
+def zip_dirs():
+    return set(glob.glob(os.path.join(tempfile.gettempdir(), "dfs_pyfiles_*")))
+
+first, second = _Session(), _Session()
+ensure_session(first)
+built = zip_dirs()
+ensure_session(second)
+assert len(built) == 1 and zip_dirs() == built, sorted(zip_dirs())
+assert first.sparkContext.py_files == second.sparkContext.py_files
+print(first.sparkContext.py_files[0])
+"""
+
+
+def test_ensure_session_ships_one_package_zip(tmp_path):
+    """Every session of a process ships the same package zip, built
+    once in a temp dir that is removed when the interpreter exits."""
+    import subprocess
+    import sys
+
+    run = subprocess.run(
+        [sys.executable, "-c", _TWO_SESSIONS],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True,
+        text=True,
+    )
+    assert run.returncode == 0, run.stderr
+    shipped = run.stdout.strip().splitlines()[-1]
+    assert shipped.startswith(str(tmp_path)) and shipped.endswith(".zip")
+    assert not os.path.exists(os.path.dirname(shipped))

@@ -15,31 +15,12 @@ track cumulative input and fail both plateau checks by construction.
 
 from __future__ import annotations
 
-import os
-import time
-import uuid
-
 import pytest
 from pyspark.sql import functions as F
 
-from demo_flink_spark.streaming.state_receipt import (
-    assert_plateaus,
-    batch_state_metrics,
-)
-
-@pytest.fixture()
-def few_shuffle_partitions(spark):
-    """State-store commit overhead scales with shuffle partitions (one
-    store instance per partition per stateful operator per batch); the
-    receipt's 22 micro-batches only need a handful of keys per batch,
-    so run them on 4 partitions and restore the session default after.
-    The boundedness claim is partition-count-independent — eviction is
-    per-key event-time logic."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    yield
-    spark.conf.set("spark.sql.shuffle.partitions", prev)
-
+from demo_flink_spark.sources.streams import file_stream
+from demo_flink_spark.streaming.harness import run_to_memory, stage_batches
+from demo_flink_spark.streaming.state_receipt import assert_plateaus
 
 N_BATCHES = 22
 ROWS_PER_BATCH = 24
@@ -48,59 +29,34 @@ ROWS_PER_BATCH = 24
 # watermark advances later
 STEP_S = 60
 BASE_EPOCH = 1_700_000_000
+SLIDING_SCHEMA = "key string, sec long"
 
 
-def _stage_sliding_batches(spark, stage_dir) -> str:
-    """One parquet file per micro-batch (maxFilesPerTrigger=1), mtime-
-    stamped for deterministic trigger order (harness pattern). Keys
-    are unique per batch — the sliding population."""
-    stage = str(stage_dir)
-    os.makedirs(stage, exist_ok=True)
-    base = time.time() - N_BATCHES - 1
-    stamped: set[str] = set()
-    for b in range(N_BATCHES):
-        rows = [
-            (f"k{b}_{i}", BASE_EPOCH + b * STEP_S + (i % 5))
-            for i in range(ROWS_PER_BATCH)
-        ]
-        spark.createDataFrame(rows, "key string, sec long").coalesce(
-            1
-        ).write.mode("append").parquet(stage)
-        for fname in os.listdir(stage):
-            if fname.endswith(".parquet") and fname not in stamped:
-                os.utime(os.path.join(stage, fname), (base + b, base + b))
-                stamped.add(fname)
-    return stage
+def _stage_sliding(spark, tmp_path) -> str:
+    """One file per micro-batch; keys are unique per batch — the
+    sliding population."""
+    frames = [
+        spark.createDataFrame(
+            [
+                (f"k{b}_{i}", BASE_EPOCH + b * STEP_S + (i % 5))
+                for i in range(ROWS_PER_BATCH)
+            ],
+            SLIDING_SCHEMA,
+        )
+        for b in range(N_BATCHES)
+    ]
+    return stage_batches(frames, tmp_path / "src")
 
 
-def _read_stream(spark, stage, schema="key string, sec long"):
+def _sliding_stream(spark, stage):
     return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+        file_stream(spark, stage, SLIDING_SCHEMA)
         .withColumn("ts", F.col("sec").cast("timestamp"))
         .drop("sec")
     )
 
 
-def _run_to_memory(df, tmp_path) -> tuple:
-    name = f"bounded_{uuid.uuid4().hex[:8]}"
-    query = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-        .start()
-    )
-    try:
-        query.processAllAvailable()
-        metrics = batch_state_metrics(query)
-    finally:
-        query.stop()
-    return name, metrics
-
-
-def test_stream_stream_join_state_plateaus(spark, tmp_path, few_shuffle_partitions):
+def test_stream_stream_join_state_plateaus(spark, tmp_path):
     """The stream-stream join buffers BOTH sides in the state store;
     the event-time constraint + watermark must evict rows that can no
     longer match. 22 micro-batches x 24 fresh keys per side = 1056
@@ -108,18 +64,20 @@ def test_stream_stream_join_state_plateaus(spark, tmp_path, few_shuffle_partitio
     rows. Measured: the plateau holds at ~2-3 batches' worth."""
     from demo_flink_spark.streaming.joins import stream_stream_join
 
-    stage = _stage_sliding_batches(spark, tmp_path / "src")
-    left = _read_stream(spark, stage)
-    right = _read_stream(spark, stage)
+    stage = _stage_sliding(spark, tmp_path)
     joined = stream_stream_join(
-        left, right, key="key", left_ts="ts", right_ts="ts",
+        _sliding_stream(spark, stage), _sliding_stream(spark, stage),
+        key="key", left_ts="ts", right_ts="ts",
         watermark="10 seconds", within="10 seconds",
     )
-    name, metrics = _run_to_memory(
-        joined.select(F.col("l.key").alias("key")), tmp_path
+    metrics: list[dict] = []
+    out = run_to_memory(
+        joined.select(F.col("l.key").alias("key")),
+        tmp_path / "ckpt",
+        metrics_out=metrics,
     )
 
-    total_output = spark.table(name).count()
+    total_output = out.count()
     # every key matches itself within the window, both directions
     # collapse to one row per (l,r) pair; the 5 distinct second
     # offsets all sit within ±10 s, so each key yields >= 1 match
@@ -130,15 +88,15 @@ def test_stream_stream_join_state_plateaus(spark, tmp_path, few_shuffle_partitio
     assert_plateaus(series, ingested)
 
 
-def test_windowed_agg_state_plateaus(spark, tmp_path, few_shuffle_partitions):
+def test_windowed_agg_state_plateaus(spark, tmp_path):
     """Watermarked tumbling-window count (W1+W3): open windows are
     the state; closed windows must evict after the watermark passes.
     Fresh keys per batch mean a non-evicting agg would retain one
     state row per (window, key) forever — cumulative growth."""
     from demo_flink_spark.streaming.windows import windowed_count_stream
 
-    stage = _stage_sliding_batches(spark, tmp_path / "src")
-    stream = _read_stream(spark, stage).withColumnRenamed("key", "word")
+    stream = _sliding_stream(spark, _stage_sliding(spark, tmp_path))
+    stream = stream.withColumnRenamed("key", "word")
     counted = windowed_count_stream(
         stream,
         ts_col="ts",
@@ -146,11 +104,12 @@ def test_windowed_agg_state_plateaus(spark, tmp_path, few_shuffle_partitions):
         window_duration="10 seconds",
         watermark_delay="10 seconds",
     )
-    name, metrics = _run_to_memory(counted, tmp_path)
+    metrics: list[dict] = []
+    out = run_to_memory(counted, tmp_path / "ckpt", metrics_out=metrics)
 
     # append mode emits each window exactly once, after it closes;
     # the final batches' windows stay open at stream end
-    emitted = spark.table(name).count()
+    emitted = out.count()
     distinct_keys = N_BATCHES * ROWS_PER_BATCH
     assert emitted >= distinct_keys - 3 * ROWS_PER_BATCH
 
@@ -158,7 +117,7 @@ def test_windowed_agg_state_plateaus(spark, tmp_path, few_shuffle_partitions):
     assert_plateaus(series, distinct_keys)
 
 
-def test_streaming_dedup_state_plateaus(spark, tmp_path, few_shuffle_partitions):
+def test_streaming_dedup_state_plateaus(spark, tmp_path):
     """dropDuplicatesWithinWatermark (streaming_dedup): the seen-keys
     set is the state; its docstring claims eviction once the watermark
     passes — the bounded-state trade every streaming dedup makes.
@@ -167,15 +126,15 @@ def test_streaming_dedup_state_plateaus(spark, tmp_path, few_shuffle_partitions)
     input), so correctness is total passthrough."""
     from demo_flink_spark.streaming.windows import streaming_dedup
 
-    stage = _stage_sliding_batches(spark, tmp_path / "src")
-    stream = _read_stream(spark, stage)
     deduped = streaming_dedup(
-        stream, key_cols=["key"], ts_col="ts", watermark_delay="10 seconds"
+        _sliding_stream(spark, _stage_sliding(spark, tmp_path)),
+        key_cols=["key"], ts_col="ts", watermark_delay="10 seconds",
     )
-    name, metrics = _run_to_memory(deduped, tmp_path)
+    metrics: list[dict] = []
+    out = run_to_memory(deduped, tmp_path / "ckpt", metrics_out=metrics)
 
     # every key is unique corpus-wide -> nothing is actually dropped
-    assert spark.table(name).count() == N_BATCHES * ROWS_PER_BATCH
+    assert out.count() == N_BATCHES * ROWS_PER_BATCH
 
     series = [m["state_rows"] for m in metrics if m["input_rows"] > 0]
     assert_plateaus(series, N_BATCHES * ROWS_PER_BATCH)
@@ -203,7 +162,7 @@ def _flush_source(spark):
     )
 
 
-def test_custom_stateful_op_timeout_evicts(spark, tmp_path, few_shuffle_partitions):
+def test_custom_stateful_op_timeout_evicts(spark, tmp_path):
     """The fourth receipt (VERDICT r13 #2): a CUSTOM keyed stateful
     operator — applyInPandasWithState with the timers.py inactivity-
     flush kernel — through run_stateful's opt-in EventTimeTimeout.
@@ -251,9 +210,7 @@ def test_custom_stateful_op_timeout_evicts(spark, tmp_path, few_shuffle_partitio
     assert_plateaus(series, total_keys)
 
 
-def test_custom_stateful_op_no_timeout_grows_with_keys(
-    spark, tmp_path, few_shuffle_partitions
-):
+def test_custom_stateful_op_no_timeout_grows_with_keys(spark, tmp_path):
     """The measured NoTimeout growth law (SCALING.md r14): without a
     timeout the store holds exactly one state row per DISTINCT KEY
     EVER SEEN — faithful to the reference's W2 no-watermark CDC

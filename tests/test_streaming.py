@@ -16,6 +16,7 @@ import uuid
 from pyspark.sql import functions as F
 
 from demo_flink_spark.sources.streams import file_stream, socket_lines
+from demo_flink_spark.streaming.harness import run_to_memory, stage_batches
 from demo_flink_spark.streaming.late_data import LateRouter
 from demo_flink_spark.streaming.windows import (
     streaming_dedup,
@@ -38,51 +39,26 @@ F2 = [
 ]
 
 
-def _write_batches(spark, tmp_path, rows, schema="b int, ts_ms long, word string"):
-    stage = str(tmp_path / "src")
+def _stream(spark, tmp_path, rows, schema="b int, ts_ms long, word string"):
+    """File stream replaying `rows` one batch `b` per trigger, with an
+    event-time `ts` column."""
     df = spark.createDataFrame(rows, schema)
-    n_batches = df.select(F.max("b")).first()[0] + 1
-    # FileStreamSource orders by mtime (path-tiebreak is a random UUID
-    # name): stamp strictly increasing mtimes so trigger order is the
-    # batch order regardless of filesystem timestamp granularity.
-    import os
-
-    base = time.time() - n_batches - 1
-    stamped: set[str] = set()
-    for b in range(n_batches):
-        df.filter(F.col("b") == b).drop("b").coalesce(1).write.mode("append").parquet(
-            stage
-        )
-        for fname in os.listdir(stage):
-            if fname.endswith(".parquet") and fname not in stamped:
-                os.utime(os.path.join(stage, fname), (base + b, base + b))
-                stamped.add(fname)
-    return stage, df.drop("b").schema
-
-
-def _with_ts(stream):
-    return stream.withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
+    batches = sorted({r[0] for r in rows})
+    frames = [df.filter(F.col("b") == b).drop("b") for b in batches]
+    stage = stage_batches(frames, tmp_path / "src")
+    return file_stream(spark, stage, frames[0].schema).withColumn(
+        "ts", F.timestamp_millis(F.col("ts_ms"))
+    )
 
 
 def test_allowed_lateness_refire_and_silent_drop(spark, tmp_path):
-    stage, schema = _write_batches(spark, tmp_path, F2)
-    stream = _with_ts(file_stream(spark, stage, schema))
     counts = windowed_count_stream(
-        stream, ts_col="ts", key_col="word", watermark_delay="10 seconds"
+        _stream(spark, tmp_path, F2),
+        ts_col="ts",
+        key_col="word",
+        watermark_delay="10 seconds",
     )
-    name = f"wmtest_{uuid.uuid4().hex[:8]}"
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.table(name).collect()
+    rows = run_to_memory(counts, tmp_path / "ckpt", "update").collect()
     emissions = [
         (str(r["window_start"]), r["word"], r["cnt"]) for r in rows
     ]
@@ -101,8 +77,7 @@ def test_allowed_lateness_refire_and_silent_drop(spark, tmp_path):
 
 
 def test_late_router_side_output(spark, tmp_path):
-    stage, schema = _write_batches(spark, tmp_path, F2)
-    stream = _with_ts(file_stream(spark, stage, schema))
+    stream = _stream(spark, tmp_path, F2)
     on_time_rows, late_rows = [], []
     router = LateRouter(
         ts_col="ts",
@@ -136,22 +111,11 @@ def test_streaming_dedup(spark, tmp_path):
         (1, 1000, "x"),  # dup across batches (within watermark state)
         (1, 2000, "y"),
     ]
-    stage, schema = _write_batches(spark, tmp_path, rows)
-    stream = _with_ts(file_stream(spark, stage, schema))
-    deduped = streaming_dedup(stream, ["word"], ts_col="ts")
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
+    deduped = streaming_dedup(_stream(spark, tmp_path, rows), ["word"], ts_col="ts")
+    got = sorted(
+        (r["ts_ms"], r["word"])
+        for r in run_to_memory(deduped, tmp_path / "ckpt").collect()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = sorted((r["ts_ms"], r["word"]) for r in spark.table(name).collect())
     assert got == [(1000, "x"), (2000, "y")]
 
 
@@ -222,31 +186,14 @@ def test_streaming_session_window(spark, tmp_path):
         (2, 70000, "u3"),
         (3, 100000, "u3"),
     ]
-    stage, schema = _write_batches(
-        spark, tmp_path, rows, schema="b int, ts_ms long, word string"
-    )
-    stream = _with_ts(file_stream(spark, stage, schema)).withColumnRenamed(
-        "word", "user"
-    )
+    stream = _stream(spark, tmp_path, rows).withColumnRenamed("word", "user")
     sessions = session_count_stream(
         stream, ts_col="ts", key_col="user", gap="10 seconds",
         watermark_delay="10 seconds",
     )
-    name = f"sess_{uuid.uuid4().hex[:8]}"
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     got = sorted(
         (r["user"], str(r["session_start"]), str(r["session_end"]), r["n_events"])
-        for r in spark.table(name).collect()
+        for r in run_to_memory(sessions, tmp_path / "ckpt").collect()
     )
     assert got == [
         ("u1", "1970-01-01 00:00:01", "1970-01-01 00:00:18", 3),
@@ -274,10 +221,7 @@ def test_streaming_windowed_topn_matches_batch(spark, tmp_path):
         (1, 6 * H // 8, "u3"),
         (1, H + 2000, "u2"),
     ]
-    stage, schema = _write_batches(
-        spark, tmp_path, rows, "b int, ts_ms long, user string"
-    )
-    stream = _with_ts(file_stream(spark, stage, schema))
+    stream = _stream(spark, tmp_path, rows, "b int, ts_ms long, user string")
     counts = stream.groupBy(F.window("ts", "1 hour").alias("w"), "user").count()
 
     from pyspark.sql.window import Window as W
@@ -341,29 +285,16 @@ def test_ohlc_stream_matches_batch_twin(spark, tmp_path):
         # next window
         (1, 7, base + 910_000, "x", 4.0),
     ]
-    stage, schema = _write_batches(
+    stream = _stream(
         spark,
         tmp_path,
         rows,
         "b int, event_id long, ts_ms long, event_type string, value double",
     )
-    stream = _with_ts(file_stream(spark, stage, schema))
     bars = ohlc_bars_stream(stream, watermark_delay="30 minutes")
-    name = f"ohlc_{uuid.uuid4().hex[:8]}"
-    q = (
-        bars.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # update mode re-emits corrected bars: keep the LAST emission per key
     final = {}
-    for r in spark.table(name).collect():
+    for r in run_to_memory(bars, tmp_path / "ckpt", "update").collect():
         final[(r["key"], str(r["bucket_ts"]))] = r
     batch_df = spark.createDataFrame(rows, "b int, event_id long, ts_ms long, event_type string, value double")
     batch = ohlc_bars(

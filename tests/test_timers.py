@@ -3,33 +3,11 @@ leave the state store after event-time inactivity; live keys don't."""
 
 from __future__ import annotations
 
-import os
-import time
-import uuid
-
 from pyspark.sql import functions as F
 
+from demo_flink_spark.sources.streams import file_stream
+from demo_flink_spark.streaming.harness import run_to_memory, stage_batches
 from demo_flink_spark.streaming.timers import inactivity_flush_stream
-
-
-def _staged(spark, rows, tmp):
-    df = spark.createDataFrame(rows, "b int, ts_ms long, user_id string, value double")
-    n = df.select(F.max("b")).first()[0] + 1
-    base = time.time() - n - 1
-    stamped: set[str] = set()
-    for b in range(n):
-        df.filter(F.col("b") == b).drop("b").coalesce(1).write.mode("append").parquet(
-            tmp
-        )
-        for fname in os.listdir(tmp):
-            if fname.endswith(".parquet") and fname not in stamped:
-                os.utime(os.path.join(tmp, fname), (base + b, base + b))
-                stamped.add(fname)
-    return (
-        spark.readStream.schema(df.drop("b").schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(tmp)
-    )
 
 
 def test_inactivity_flush_fires_on_watermark_and_clears_state(spark, tmp_path):
@@ -47,25 +25,15 @@ def test_inactivity_flush_fires_on_watermark_and_clears_state(spark, tmp_path):
         (3, 100_000, "u4", 0.0),
         (4, 140_000, "u4", 0.0),
     ]
-    stream = _staged(spark, rows, str(tmp_path / "src")).withColumn(
-        "ts", F.timestamp_millis(F.col("ts_ms"))
-    )
+    df = spark.createDataFrame(rows, "b int, ts_ms long, user_id string, value double")
+    frames = [df.filter(F.col("b") == b).drop("b") for b in range(5)]
+    stream = file_stream(
+        spark, stage_batches(frames, tmp_path / "src"), frames[0].schema
+    ).withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
     flushes = inactivity_flush_stream(stream, gap_ms=10_000)
-    name = f"flush_{uuid.uuid4().hex[:8]}"
-    q = (
-        flushes.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     got = {
         r["user_id"]: (r["n_events"], r["sum_value"])
-        for r in spark.table(name).collect()
+        for r in run_to_memory(flushes, tmp_path / "ckpt").collect()
     }
     # quiet keys flushed with their full accumulation
     assert got["u1"] == (2, 3.0)
