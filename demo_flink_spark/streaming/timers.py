@@ -24,14 +24,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupStateTimeout
 
-OUTPUT_SCHEMA = "user_id string, n_events long, sum_value double"
-STATE_SCHEMA = "n long, total double, last_ts long"
+from demo_flink_spark.streaming.stateful_ops import StatefulOp
 
 
-def make_inactivity_flush(gap_ms: int):
-    """Build the applyInPandasWithState function: accumulate per key;
-    when no event arrives for `gap_ms` of event time, emit one summary
-    row and remove the state (Flink onTimer parity)."""
+def inactivity_flush_op(gap_ms: int) -> StatefulOp:
+    """The operator: accumulate per key; when no event arrives for
+    `gap_ms` of event time, emit one summary row and remove the state
+    (Flink onTimer parity). Apply it with
+    `GroupStateTimeout.EventTimeTimeout` over a watermarked stream."""
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         if state.hasTimedOut:
@@ -52,7 +52,12 @@ def make_inactivity_flush(gap_ms: int):
         state.setTimeoutTimestamp(last_ts + gap_ms)
         yield pd.DataFrame(columns=["user_id", "n_events", "sum_value"])
 
-    return fn
+    return StatefulOp(
+        name="inactivity_flush",
+        fn=fn,
+        output_schema="user_id string, n_events long, sum_value double",
+        state_schema="n long, total double, last_ts long",
+    )
 
 
 def inactivity_flush_stream(
@@ -65,14 +70,7 @@ def inactivity_flush_stream(
     """Wire the operator: expects `ts` (timestamp) and `ts_ms`/`value`
     columns; emits one (user_id, n_events, sum_value) row per flushed
     key. EventTimeTimeout requires a watermark on the input."""
-    return (
-        stream.withWatermark(ts_col, watermark_delay)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            make_inactivity_flush(gap_ms),
-            OUTPUT_SCHEMA,
-            STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return inactivity_flush_op(gap_ms).apply(
+        stream.withWatermark(ts_col, watermark_delay).groupBy(key_col),
+        GroupStateTimeout.EventTimeTimeout,
     )

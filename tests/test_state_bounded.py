@@ -174,19 +174,9 @@ def test_custom_stateful_op_timeout_evicts(spark, tmp_path):
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from demo_flink_spark.streaming.harness import run_stateful
-    from demo_flink_spark.streaming.stateful_ops import StatefulOp
-    from demo_flink_spark.streaming.timers import (
-        OUTPUT_SCHEMA,
-        STATE_SCHEMA,
-        make_inactivity_flush,
-    )
+    from demo_flink_spark.streaming.timers import inactivity_flush_op
 
-    op = StatefulOp(
-        name="inactivity_flush",
-        fn=make_inactivity_flush(gap_ms=15_000),
-        output_schema=OUTPUT_SCHEMA,
-        state_schema=STATE_SCHEMA,
-    )
+    op = inactivity_flush_op(gap_ms=15_000)
     metrics: list[dict] = []
     out = run_stateful(
         spark,

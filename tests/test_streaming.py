@@ -244,7 +244,6 @@ def test_streaming_windowed_topn_matches_batch(spark, tmp_path):
     q = (
         counts.writeStream.outputMode("complete")
         .foreachBatch(rerank)
-        .option("maxFilesPerTrigger", 1)
         .start()
     )
     try:

@@ -6,8 +6,9 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== 1/8 registry import guard"
-python -m pytest tests/test_registry.py -q
+echo "== 1/8 registry import guard + worker daemon (every Python UDF forks from it)"
+python -m pytest tests/test_registry.py \
+    tests/test_worker_daemon.py::test_unchanged_archive_is_not_reread -q
 
 echo "== 2/8 benchmark unit tests (perfbench/)"
 python -m pytest perfbench/tests -q
