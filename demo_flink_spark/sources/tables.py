@@ -96,9 +96,9 @@ def _package_zip() -> str:
 # Contract for table MUTATION (the memo contract, mirrored): a flow
 # that rewrites <sf_dir>/<name>.parquet mid-session must call
 # `clear_table_handles()` or the cached handle's frozen file listing
-# points at deleted part-files. No in-repo flow rewrites a load_table
-# path in-session (tools/scale_probe.py builds its derived dir
-# before its first read); the hook exists for external callers.
+# points at deleted part-files. The one in-repo flow that writes a
+# load_table path is tools/probe.py::build_sf1, which calls this hook
+# after it rebuilds its derived dir.
 _HANDLES: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )

@@ -30,7 +30,7 @@ from demo_flink_spark.operators import dedup as dd
 
 def _letters(s: str) -> str:
     """Hex -> letters so the dedup canonicalizer (strips digits)
-    keeps every token intact (same trick as tools/scale_probe_synth)."""
+    keeps every token intact (same trick as tools/probe.py scale synth)."""
     return s.translate(str.maketrans("0123456789", "ghijklmnop"))
 
 
