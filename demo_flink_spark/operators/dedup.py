@@ -1056,158 +1056,104 @@ def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components of a pair graph by min-label propagation:
-    (node, component) with component = min node id in the component.
-
-    Each iteration is one equi-join + one min-aggregate; convergence
-    takes O(graph diameter) rounds. Near-dup components are near-
-    cliques (diameter ≤ ~3), so 3-4 rounds settle real corpora, and
-    `localCheckpoint` truncates lineage so the plan doesn't grow per
-    round. For adversarial long-chain graphs use
-    `connected_components_star` (large-star/small-star, O(log²)
-    rounds regardless of diameter).
-    """
-    sym = edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-    sym = sym.union(sym.select(F.col("t").alias("s"), F.col("s").alias("t")))
-    sym = sym.transform(cut_lineage)
-    labels = sym.select(F.col("s").alias("node")).distinct().withColumn(
-        "comp", F.col("node")
-    )
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(labels, sym.t == labels.node)
-            .groupBy("s")
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        new_comp = F.least(F.col("comp"), F.coalesce("nbr_comp", F.col("comp")))
-        # labels only ever decrease, so "changed" is computable inline —
-        # no second join against the previous labels per round
-        new_labels = (
-            labels.join(nbr_min, labels.node == nbr_min.s, "left")
-            .select(
-                "node",
-                new_comp.alias("comp"),
-                (new_comp < F.col("comp")).alias("chg"),
-            )
-            .transform(cut_lineage)
-        )
-        changed = new_labels.filter("chg").count()
-        labels = new_labels.drop("chg")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still moving): the graph has long chains — "
-            "use connected_components_star (O(log²) rounds) instead"
-        )
-    return labels
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
     max_iter: int = 30,
 ) -> DataFrame:
-    """Connected components by alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond"):
-    O(log² n) rounds on ANY graph shape, vs O(diameter) for
-    `connected_components`' min-label propagation.
+    """Connected components of a pair graph: (node, comp), one row per
+    node of `edges`, with comp = the component's minimum node id.
 
-    Use this variant when components can be long chains (transitive
-    near-dup paths A~B~C~... from chained fuzzy matches); the
-    min-label walker needs |chain| rounds there, this needs ~log².
+    Alternating large-star/small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014) needs O(log² n)
+    rounds on any graph shape, long chains included. The state between
+    rounds is the symmetric adjacency (u, nb), nb = u's sorted
+    neighbour set, and each half-round is one shuffle:
 
-    large-star: every node points its LARGER neighbors at its local
-    minimum; small-star: the ≤-side collapses onto the minimum.
-    Both are one groupBy + one join per round; convergence = the
-    oriented edge multiset stops changing (checked with a count +
-    checksum aggregate, no subtract join). Result: (node, comp) with
-    comp = the component's minimum id.
+    - large-star: with m = least(u, min(nb)), every larger neighbour
+      v > u is pointed at m and the edges to smaller neighbours are
+      kept; one groupBy(u) gathers each node's smaller neighbours S(u);
+    - small-star: u and all of S(u) are joined to min(S(u)) in both
+      orientations; one groupBy(u) gathers the next adjacency.
+
+    The set aggregates dedup the edges, so no round runs a `distinct`.
+    Each adjacency is cut lazily, and its count + bit_xor(xxhash64)
+    signature is the round's first action. A signature equal to the
+    previous round's only gates the exact left_anti check, so a
+    colliding signature cannot fake convergence. Hitting `max_iter`
+    raises rather than return labels that are not component minima;
+    O(log² n) rounds means 30 covers any storable graph.
+
+    Memory: at convergence each component is a star on its minimum,
+    so the minimum's nb array holds its whole component in one row
+    (8 bytes per member). The largest component must fit in one row.
+    A row form (window dedup and running minimum, the same two
+    shuffles) keeps no such array but ran 2.4x slower at 100k nodes
+    (SCALING.md, cc mode).
+
+    The result is a projection of the converged, materialized
+    adjacency: counting it does not recompute the build. A self-pair
+    (a, a) adds no edge, and a node seen only in self-pairs is its own
+    component.
     """
-    # oriented symmetric adjacency, self-loops dropped
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    e = (
-        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .transform(cut_lineage)
-    )
+    e = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
 
-    def _stars(cur: DataFrame) -> DataFrame:
-        # one round: large-star then small-star
-        mins = cur.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
+    def adjacency(uv: DataFrame) -> DataFrame:
+        nb = F.array_sort(F.array_remove(F.collect_set("v"), F.col("u")))
+        return uv.groupBy("u").agg(nb.alias("nb")).transform(cut_lineage_lazy)
+
+    def star_round(adj: DataFrame) -> DataFrame:
+        # m is a column so it is computed once per row: inside an array
+        # lambda it would be re-evaluated per element, O(k²) on a hub
+        larger = F.col("v") > F.col("u")
         large = (
-            cur.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        keep = cur.filter(F.col("v") < F.col("u"))
-        ls = (
-            large.union(keep)
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        mins2 = ls.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            ls.join(mins2, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins2.select(F.col("u"), F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # restore symmetric orientation for the next round
-        return (
-            small.union(
-                small.select(F.col("v").alias("u"), F.col("u").alias("v"))
+            adj.withColumn("m", F.least("u", F.array_min("nb")))
+            .select("u", "m", F.explode("nb").alias("v"))
+            .select(
+                F.when(larger, F.col("v")).otherwise(F.col("u")).alias("u"),
+                F.when(larger, F.col("m")).otherwise(F.col("v")).alias("v"),
             )
-            .distinct()
-            .transform(cut_lineage)
         )
+        # every large-star edge runs from its larger end u to v < u
+        small = (
+            large.groupBy("u").agg(F.collect_set("v").alias("s"))
+            .withColumn("m", F.array_min("s"))
+            .select("m", F.explode(F.concat("s", F.array("u"))).alias("x"))
+            .filter(F.col("x") != F.col("m"))
+            .select(F.inline(F.array(
+                F.struct(F.col("x").alias("u"), F.col("m").alias("v")),
+                F.struct(F.col("m").alias("u"), F.col("x").alias("v")),
+            )))
+        )
+        return adjacency(small)
 
-    def _sig(cur: DataFrame):
-        # Order-independent, overflow-free signature: sum(xxhash64)
-        # can ARITHMETIC_OVERFLOW under ANSI depending on partial-sum
-        # order (partitioning-dependent flake); bit_xor cannot.
-        row = cur.agg(
+    def signature(adj: DataFrame):
+        # bit_xor, not sum: a sum of xxhash64 can ARITHMETIC_OVERFLOW
+        # under ANSI depending on the partial-sum order
+        row = adj.agg(
             F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
+            F.expr("bit_xor(xxhash64(u, nb))").alias("h"),
         ).collect()[0]
         return row.n, row.h
 
-    sig = _sig(e)
+    first = adjacency(e)
+    cur, sig = first, signature(first)
     for _ in range(max_iter):
-        prev = e
-        e = _stars(e)
-        new_sig = _sig(e)
-        # a 64-bit signature match only GATES the exact check (the
-        # hardened iterative-loop rule, same as pagerank / label
-        # propagation): both sides are distinct edge sets, so equal
-        # counts (in the signature) + an empty one-direction anti-join
-        # prove set equality — a colliding signature can no longer
-        # fake convergence
-        if new_sig == sig and e.join(prev, ["u", "v"], "left_anti").isEmpty():
+        nxt = star_round(cur)
+        nxt_sig = signature(nxt)
+        # one row per u on both sides: equal counts (in the signature)
+        # and an empty one-way anti-join prove the adjacencies equal
+        if nxt_sig == sig and nxt.join(cur, ["u", "nb"], "left_anti").isEmpty():
             break
-        sig = new_sig
+        cur, sig = nxt, nxt_sig
     else:
-        # falling through the cap would silently return labels that
-        # are not component minima — the same loud-failure contract
-        # as connected_components' raise at ITS cap. O(log² n) rounds
-        # means 30 covers any physically storable graph; hitting this
-        # is a regression, not a tuning knob.
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            "rounds: the oriented edge multiset is still changing"
+            f"connected_components did not converge in {max_iter} rounds: "
+            "the star adjacency is still changing"
         )
-    # after convergence every node is adjacent to its component
-    # minimum: comp(u) = min(neighbors ∪ {u})
-    return e.groupBy(F.col("u").alias("node")).agg(
-        F.least(F.min("v"), F.first("u")).alias("comp")
+    # every node is now adjacent to its component minimum; the nodes
+    # with only self-pairs left the loop after the first adjacency
+    return nxt.union(first.filter(F.size("nb") == 0)).select(
+        F.col("u").alias("node"),
+        F.least("u", F.array_min("nb")).alias("comp"),
     )
 
 
@@ -1582,7 +1528,8 @@ def dedup_keep_list(
     threshold (it is one row per paired node, which can grow with the
     corpus); past that it degrades to a shuffle join instead of an
     executor OOM. The count is ~free: `connected_components` returns a
-    checkpoint-materialized frame.
+    projection of its checkpoint-materialized final adjacency, so
+    counting it reads cached blocks and never reruns the rounds.
 
     `components`: a pre-computed (node, comp) label frame for `pairs`
     — callers that run several resolution policies over one pair list

@@ -1,7 +1,7 @@
 """Iterative graph operators on edge-list DataFrames.
 
-Connected components (min-label and large-star/small-star) live in
-`operators.dedup` where their consumer (duplicate-cluster resolution)
+Connected components (large-star/small-star) lives in
+`operators.dedup` where its consumer (duplicate-cluster resolution)
 is; this module holds the general-purpose iterative algorithms. The
 design rules for iteration on Spark, applied throughout:
 

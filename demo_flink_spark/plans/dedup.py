@@ -336,10 +336,10 @@ def q_pipeline_curation_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     already carry, so the whole pipeline is value-hash-checked as a
     unit — including which pairs the star narrowed away upstream of
     clustering. Stages at scale: the pair join is band-bucketed and
-    width-guarded (never all-pairs), CC is O(diameter≈3) rounds of
-    equi-join + min-agg on near-clique graphs, and the resolution is
-    one cluster-keyed window over a component map that broadcasts
-    while small (operators/dedup.py::dedup_keep_best).
+    width-guarded (never all-pairs), CC is O(log² n) large-star/
+    small-star rounds of two shuffles each on any graph shape, and the
+    resolution is one cluster-keyed window over a component map that
+    broadcasts while small (operators/dedup.py::dedup_keep_best).
     """
     from demo_flink_spark.operators.textstats import _tokens
 

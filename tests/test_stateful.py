@@ -168,6 +168,62 @@ def test_cdc_no_change_freezes_state(spark):
     assert seq6 == [("price", "11.05", "12.0")]
 
 
+def test_cdc_file_drop_wiring_matches_batch(spark, tmp_path):
+    """The benchmark's stream_cdc wiring, verbatim: file-drop batches
+    of trades -> groupBy(trade_id).applyInPandasWithState(CDC_DETECTOR
+    ...) must emit exactly cdc_diff_batch's rows. Four files drain as
+    two micro-batches of two files each, and TRD1000 has a record in
+    every file, so its state crosses files and micro-batches."""
+    from collections import Counter
+
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from demo_flink_spark.operators.stateful_batch import cdc_diff_batch
+    from demo_flink_spark.sources.streams import file_stream
+    from demo_flink_spark.streaming.harness import run_to_memory, stage_batches
+
+    schema = "trade_id string, seq long, value string"
+    t4 = {**T3, "quantity": 250, "version": 4}
+    files = [
+        [("TRD1000", 1, T1), ("TRD2000", 2, T5)],
+        # modify twice in one file, and a first sighting
+        [("TRD1000", 3, T2), ("TRD1000", 4, {**T2, "version": 3}),
+         ("TRD3000", 5, {**T5, "id": "TRD3000"})],
+        # add + remove (T3 adds venue, drops trader); exact repeat
+        [("TRD1000", 6, T3), ("TRD2000", 7, T5)],
+        # exact repeat, then a modify against the pre-repeat state
+        [("TRD1000", 8, T3), ("TRD1000", 9, t4),
+         ("TRD2000", 10, {**T5, "price": 402.0})],
+    ]
+    rows = [[(k, seq, json.dumps(v)) for k, seq, v in f] for f in files]
+    stage = stage_batches(
+        [spark.createDataFrame(f, schema) for f in rows], tmp_path / "trades"
+    )
+    changes = (
+        file_stream(spark, stage, schema, max_files=2)
+        .groupBy("trade_id")
+        .applyInPandasWithState(
+            CDC_DETECTOR.fn,
+            outputStructType=CDC_DETECTOR.output_schema,
+            stateStructType=CDC_DETECTOR.state_schema,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+    )
+    batches: list[dict] = []
+    out = run_to_memory(changes, tmp_path / "ckpt", metrics_out=batches)
+    got = Counter(tuple(r) for r in out.collect())
+    assert [b["input_rows"] for b in batches if b["input_rows"]] == [5, 5]
+    twin = spark.createDataFrame([r for f in rows for r in f], schema)
+    want = Counter(
+        tuple(r)
+        for r in cdc_diff_batch(twin, "trade_id", "seq", "value").collect()
+    )
+    assert {a for _, _, _, a, _, _ in want} >= {"MODIFIED", "ADDED", "REMOVED"}
+    assert not {seq for _, seq, *_ in want} & {7, 8}  # exact repeats
+    assert got == want
+
+
 def test_json_diff_type_sensitive():
     # Jackson JsonNode.equals parity: 199 != 199.0 != "199"
     assert json_diff({"q": 199}, {"q": 199.0}) == [("q", "MODIFIED", "199", "199.0")]

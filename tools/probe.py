@@ -1170,7 +1170,7 @@ K_MEGA_FRAC = 10  # skew mega block = n / 10 nodes, hub = node 0
 
 class GraphFamily:
     """Planted-truth graphs for the iterative family (pagerank, label
-    propagation, BFS, star CC). These queries are the bench's cost
+    propagation, BFS, CC). These queries are the bench's cost
     ceiling, so their asymptote gets the synthetic-decade treatment the
     dedup family got. Every cell asserts exact closed-form truth before
     its timing counts, so a convergence/recall regression fails the
@@ -1192,12 +1192,11 @@ class GraphFamily:
     - BFS: the same chains, directed head→tail, seeds = the C heads —
       the hop histogram is exactly {h: C for h in 0..4}.
 
-    cc — connected_components_star over LONG chains (length 1000,
-    diameter 999: the adversarial shape the large-star/small-star
-    variant exists for; the min-label walker would need 999 rounds and
-    raises at its 20-round cap by design). Asserts EVERY node's
-    component equals its chain head; rounds stay ~log² (the loop's
-    30-round cap is never hit) while work per round is linear in edges.
+    cc — connected_components over LONG chains (length 1000, diameter
+    999: the adversarial shape for label propagation, which would need
+    999 rounds). Asserts EVERY node's component equals its chain head;
+    large-star/small-star rounds stay ~log² (the loop's 30-round cap is
+    never hit) while work per round is linear in edges.
 
     skew — the 100 TB brief's named hazard is the HOT KEY, so this
     plants hub-dominated graphs:
@@ -1256,12 +1255,27 @@ class GraphFamily:
 
     def cell(self, edges, run, label: str) -> tuple[float, int]:
         """Persist `edges`, time `run(edges)` (warm + median of 3,
-        reclaiming after each call), release; returns (median_s, edges)."""
+        reclaiming after each call), release; returns (median_s, edges).
+        Each call runs in its own job group; the jobs of every timed rep
+        are printed beside its time."""
         edges = edges.persist()
         m = edges.count()
-        t, ts = time_reps(lambda: run(edges), warm=True, after=self.reclaim)
+        sc = self.spark.sparkContext
+        groups: list[str] = []
+
+        def grouped():
+            groups.append(f"{label} call {len(groups)}")
+            sc.setJobGroup(groups[-1], groups[-1])
+            try:
+                run(edges)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+
+        t, ts = time_reps(grouped, warm=True, after=self.reclaim)
+        # read after the reclaim sleeps, so the listener bus has caught up
+        jobs = [len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups[1:]]
         # per-cell progress: the top cells run minutes each
-        print(f"  {label}: reps {[round(x, 1) for x in ts]}", flush=True)
+        print(f"  {label}: reps {[round(x, 1) for x in ts]} jobs {jobs}", flush=True)
         edges.unpersist(blocking=True)
         self.spark.catalog.clearCache()
         return t, m
@@ -1385,12 +1399,12 @@ class GraphFamily:
     def run_cc(self, sizes) -> None:
         from pyspark.sql import functions as F
 
-        from demo_flink_spark.operators.dedup import connected_components_star
+        from demo_flink_spark.operators.dedup import connected_components
 
         rows = []
         for n in sizes:
             def run(edges):
-                comp = connected_components_star(edges)
+                comp = connected_components(edges)
                 bad = comp.filter(
                     F.col("comp") != F.col("node") - F.col("node") % K_LONG
                 ).count()
@@ -1399,12 +1413,12 @@ class GraphFamily:
                     raise AssertionError(f"CC planted truth: {bad} bad of {total}, n={n}")
 
             edges = self.chain_edges(n, K_LONG, False, names=("doc_a", "doc_b"))
-            t, m = self.cell(edges, run, f"cc_star n={n}")
+            t, m = self.cell(edges, run, f"cc n={n}")
             rows.append({"n": n, "m": m, "cc": t})
-            print(f"n={n:,} cc_star={t:.1f}s ({m:,} edges) truth: every node"
+            print(f"n={n:,} cc={t:.1f}s ({m:,} edges) truth: every node"
                   f" in its chain head's component, {n:,} nodes", flush=True)
         slope_table("nodes", rows, [("edges", "m", False),
-                                    ("cc_star (chains of 1000)", "cc", True)])
+                                    ("cc (chains of 1000)", "cc", True)])
 
     # ---- skew ----
 
