@@ -3,8 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, example, given, settings
-from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from demo_flink_spark.operators import dedup as dd
@@ -244,97 +242,31 @@ def test_star_components_converge_on_long_chain(spark):
     assert set(labels.values()) == {0}
 
 
-def _collect_cc_star(spark, parts):
-    # two chains + a clique + an isolated pair: mixed shapes
-    edges = (
-        [(i, i + 1) for i in range(0, 12)]
-        + [(100 + i, 100 + j) for i in range(5) for j in range(i + 1, 5)]
-        + [(200, 201)]
-    )
-    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
-        return sorted(
-            (r["node"], r["comp"])
-            for r in dd.connected_components(df).collect()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def test_cc_star_stable_across_shuffle_partitions(spark):
-    """The convergence signature is bit_xor, not a partial-sum-order
-    dependent sum: components are identical under any shuffle layout."""
-    results = [_collect_cc_star(spark, p) for p in (2, 13, 64)]
-    assert results[0] == results[1] == results[2]
-
-
-def _random_graph(seed: int) -> list[tuple[int, int]]:
+def test_star_components_match_min_label_on_random_graphs(spark):
+    """On sparse 40-node graphs (many small components, some chains)
+    the star components equal min-label propagation's labels: each
+    node carries the least id reachable from it."""
     import random
 
-    rng = random.Random(seed)
-    return [(rng.randrange(40), rng.randrange(40)) for _ in range(30)]
-
-
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow],
-)
-@given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 14), st.integers(0, 14)),
-        min_size=1,
-        max_size=25,
-    )
-)
-# sparse 40-node graphs: many small components, some chains
-@example(edges=_random_graph(0))
-@example(edges=_random_graph(1))
-@example(edges=_random_graph(2))
-def test_cc_star_matches_union_find(spark, edges):
-    """Star-contraction components == a pure-Python union-find on
-    random multigraphs (self-loops, duplicates, both orientations)."""
-    edges = [(a, b) for a, b in edges if a != b]
-    if not edges:
-        return
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {x: find(x) for x in parent}
-    # canonicalize: union-find roots are already component minima here
-    # because we always merge larger root onto smaller
-    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    got = {
-        r["node"]: r["comp"] for r in dd.connected_components(df).collect()
-    }
-    assert got == want
-
-
-def test_cc_star_raises_at_iteration_cap(spark):
-    """Hitting the round cap must raise loudly, never return labels
-    that are not component minima."""
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], "doc_a long, doc_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge in 1"):
-        dd.connected_components(chain, max_iter=1)
-    # and with the default cap the same chain converges exactly
-    comp = dd.connected_components(chain)
-    assert {(r["node"], r["comp"]) for r in comp.collect()} == {
-        (i, 0) for i in range(13)
-    }
+    for seed in range(3):
+        rng = random.Random(seed)
+        edges = [
+            (rng.randrange(40), rng.randrange(40)) for _ in range(30)
+        ]
+        edges = [(a, b) for a, b in edges if a != b]
+        # min-label propagation, run in Python to its fixpoint
+        want = {x: x for e in edges for x in e}
+        changed = True
+        while changed:
+            changed = False
+            for a, b in edges:
+                m = min(want[a], want[b])
+                if want[a] != m or want[b] != m:
+                    want[a] = want[b] = m
+                    changed = True
+        df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+        got = {r.node: r.comp for r in dd.connected_components(df).collect()}
+        assert got == want, f"seed {seed} diverged"
 
 
 def test_semantic_dedup_cells_custom_id_col(spark):

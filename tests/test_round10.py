@@ -175,6 +175,23 @@ def test_repetition_stream_default_checkpoint_resumes(spark, tmp_path):
     assert os.path.isdir(os.path.join(out_dir, "_checkpoint"))
 
 
+def test_cc_star_raises_at_iteration_cap(spark):
+    """Hitting the round cap must raise loudly, never return labels
+    that are not component minima."""
+    from demo_flink_spark.operators.dedup import connected_components
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 1"):
+        connected_components(chain, max_iter=1)
+    # and with the default cap the same chain converges exactly
+    comp = connected_components(chain)
+    assert {(r["node"], r["comp"]) for r in comp.collect()} == {
+        (i, 0) for i in range(13)
+    }
+
+
 def test_components_guard_schema_and_coverage(spark, monkeypatch):
     from demo_flink_spark.operators import dedup as dd
 

@@ -2,11 +2,13 @@
 
 1. The driver-red class of round 7 — order-dependent ANSI overflow in
    iterative convergence signatures — is pinned three ways: a
-   shuffle-partition shake regression for pagerank, a unit test
-   proving the new source lint catches the reverted construct, and
-   hypothesis property tests for the remaining iterative operators
-   (sketch_residual_quantile vs a full-sort reference incl. NULLs/ties,
-   label propagation vs a Python simulation).
+   shuffle-partition shake regression for pagerank AND star-contraction
+   CC (the two fixed sites), a unit test proving the new source lint
+   catches the reverted construct, and hypothesis property tests for
+   the remaining iterative operators
+   (CC vs union-find, sketch_residual_quantile vs a full-sort
+   reference incl. NULLs/ties, label propagation vs a Python
+   simulation).
 2. The advisor's winsorize NULL-passthrough and STL weekly-phase fixes
    get behavior tests the NULL-free driver fixture cannot provide.
 """
@@ -39,12 +41,38 @@ def _collect_pagerank(spark, parts):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def _collect_cc_star(spark, parts):
+    from demo_flink_spark.operators.dedup import connected_components
+
+    # two chains + a clique + an isolated pair: mixed shapes
+    edges = (
+        [(i, i + 1) for i in range(0, 12)]
+        + [(100 + i, 100 + j) for i in range(5) for j in range(i + 1, 5)]
+        + [(200, 201)]
+    )
+    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    try:
+        return sorted(
+            (r["node"], r["comp"])
+            for r in connected_components(df).collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def test_pagerank_stable_across_shuffle_partitions(spark):
     """The round-7 driver red was a partitioning-dependent crash
     (sum(xxhash64) partial-sum overflow order). The signature is now
     bit_xor; pagerank must run AND produce bit-identical ranks under
     wildly different shuffle layouts."""
     results = [_collect_pagerank(spark, p) for p in (2, 13, 64)]
+    assert results[0] == results[1] == results[2]
+
+
+def test_cc_star_stable_across_shuffle_partitions(spark):
+    results = [_collect_cc_star(spark, p) for p in (2, 13, 64)]
     assert results[0] == results[1] == results[2]
 
 
@@ -70,6 +98,52 @@ def test_srclint_catches_sum_over_hash(tmp_path):
     assert "mod.py:1" in hits[0] and "mod.py:2" in hits[1]
     # and the real tree is clean
     assert srclint_sum_over_hash("/root/repo/demo_flink_spark") == []
+
+
+# ------------------------------------------------- hypothesis: CC star
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 14), st.integers(0, 14)),
+        min_size=1,
+        max_size=25,
+    )
+)
+def test_cc_star_matches_union_find(spark, edges):
+    """Star-contraction components == a pure-Python union-find on
+    random multigraphs (self-loops, duplicates, both orientations)."""
+    from demo_flink_spark.operators.dedup import connected_components
+
+    edges = [(a, b) for a, b in edges if a != b]
+    if not edges:
+        return
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    want = {x: find(x) for x in parent}
+    # canonicalize: union-find roots are already component minima here
+    # because we always merge larger root onto smaller
+    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    got = {
+        r["node"]: r["comp"] for r in connected_components(df).collect()
+    }
+    assert got == want
 
 
 # --------------------------------- hypothesis: sketch-residual quantile
